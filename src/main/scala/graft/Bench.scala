@@ -17,18 +17,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def session(cpus: Int): SparkSession =
+    GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
 
   private def time[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()

@@ -18,13 +18,7 @@ object CrawlBenchProbe {
     val fanout = args.headOption.map(_.toInt).getOrElse(100)
     val depth = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val killAfter = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").appName("graft-crawl-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
 
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

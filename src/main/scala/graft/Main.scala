@@ -106,17 +106,12 @@ object Main {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(
+        sys.env.getOrElse("SPARK_MASTER", "local[32]"), shufflePartitions = 32)
       // graft optimizer rules (LevenshteinBoundRule) at session build —
       // the SparkSessionExtensions contract (round-5 verdict #2)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val t = run(a, spark)
     // the reference prints dump-matched URLs as it crawls; the engine's
     // dump table carries the same rows in the same total order

@@ -809,12 +809,8 @@ object Queries {
     * volume at the checkpoint's first batch. Results are partitioning-
     * independent (watermark/join semantics are per-key); the session
     * setting is restored after the run. */
-  private def withStreamProfile[T](s: SparkSession)(f: => T): T = {
-    val k = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(k)
-    s.conf.set(k, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    try f finally s.conf.set(k, prev)
-  }
+  private def withStreamProfile[T](s: SparkSession)(f: => T): T =
+    GraftSession.withConf(s, Map("spark.sql.shuffle.partitions" -> "4"))(f)
 
   def q23StreamWindow(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
@@ -2193,16 +2189,10 @@ object Queries {
     // auto-broadcast inside this query's scope to reproduce that regime
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-  def q56RuntimeFilter(s: SparkSession, dir: String): DataFrame = {
-    val saved = runtimeFilterConfs.keys
-      .map(k => k -> scala.util.Try(s.conf.get(k)).toOption).toMap
-    try {
-      runtimeFilterConfs.foreach { case (k, v) => s.conf.set(k, v) }
+  def q56RuntimeFilter(s: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(s, runtimeFilterConfs) {
       runtimeFilterPlan(s, dir).localCheckpoint(true)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
     }
-  }
 
   val q56Sql: String =
     """SELECT c_nationkey, count(*)::BIGINT AS n_events,

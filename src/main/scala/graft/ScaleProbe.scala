@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * One scaling level in one FRESH JVM: local-mode throughput swings up to
  * 6x with JIT/heap state inherited from earlier sessions in the same
@@ -13,11 +11,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(16000000L)
     args.drop(1).headOption.map(_.split(",").map(_.toInt)).getOrElse(Array(2, 8)).foreach { c =>
-      val s = SparkSession.builder().master(s"local[$c]")
-        .appName(s"probe$c").config("spark.sql.shuffle.partitions", c.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
+      val s = GraftSession.builder(s"local[$c]", c).getOrCreate()
       val (thr, chunkThr, _) = Bench.frontierThroughput(s, n, warmupWaves = 3)
       val roof = Bench.rooflineShuffle(s, n)
       println(s"PROBE cores=$c thr=${thr.toLong} chunk=${chunkThr.toLong} roofline=${roof.toLong}")

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.GraftSession
 import graft.model._
 import graft.urlcanon.UrlRewrite
 import graft.extract.Extract
@@ -388,56 +389,32 @@ class CrawlEngine(
   // ---- adaptive execution profile: a SMALL wave is pure driver/stage
   // latency — AQE's per-stage re-optimization jobs and a wide shuffle
   // fan-out cost more than they save (measured ~30% of fixture-crawl wall
-  // time), so waves at or below the driver-local rank threshold run with
-  // AQE off and a narrow shuffle; big waves get the session's settings
-  // back (AQE coalescing/skew handling is load-bearing at scale). Conf
-  // flips are session-scoped but the driver loop is the only planner
-  // while a crawl runs; originals are restored on every exit path.
-  private val origAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-  private val origParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-  private val origBcast =
-    spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-  private val origWsc =
-    spark.conf.get("spark.sql.codegen.wholeStage", "true")
-  private val origCgFactory =
-    spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-  private var tunedSmall = false
-  private def tuneForWaveSize(expectedRows: Long): Unit = {
-    val wantSmall = expectedRows <= SmallRankRows
-    if (wantSmall != tunedSmall) {
-      tunedSmall = wantSmall
-      if (wantSmall) {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        // broadcast joins cost one EXTRA async job per join per action
-        // (BroadcastExchange builds on its own thread pool; exchange
-        // reuse is within-query only, so every wave action rebuilds
-        // them) — ~30 of the fixture crawl's 45 jobs were broadcast
-        // builds. A tiny wave's joins run as inline 4-partition hash
-        // joins instead: the work rides the action's own job and the
-        // per-wave job count collapses to the named actions.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        // round-6 (verdict #1): the WavePhase timers put 60-75% of the
-        // small-wave floor in DRIVER time, not job execution — dominated
-        // by per-action whole-stage-codegen + expression compilation
-        // (janino), which a <=1024-row wave can never amortize (and wave
-        // plans embed per-wave literals, so the codegen cache misses
-        // every wave). Interpreted execution flips that trade: measured
-        // fixture-crawl steady 7.3s -> ~4s, cold 16.5s -> ~10s. Big
-        // waves keep codegen (it IS the right plan at scale).
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      } else restoreConf()
-    }
-  }
-  private def restoreConf(): Unit = {
-    spark.conf.set("spark.sql.adaptive.enabled", origAqe)
-    spark.conf.set("spark.sql.shuffle.partitions", origParts)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", origBcast)
-    spark.conf.set("spark.sql.codegen.wholeStage", origWsc)
-    spark.conf.set("spark.sql.codegen.factoryMode", origCgFactory)
-    tunedSmall = false
-  }
+  // time), so a wave whose queue is known to hold at most SmallRankRows
+  // rows runs, together with its snapshot commit, inside a withConf scope
+  // of SmallWaveConf; big waves and waves of unknown size run with the
+  // session's settings (AQE coalescing/skew handling is load-bearing at
+  // scale). The scope restores the session on every exit path.
+  private val SmallWaveConf = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "4",
+    // broadcast joins cost one EXTRA async job per join per action
+    // (BroadcastExchange builds on its own thread pool; exchange
+    // reuse is within-query only, so every wave action rebuilds
+    // them) — ~30 of the fixture crawl's 45 jobs were broadcast
+    // builds. A tiny wave's joins run as inline 4-partition hash
+    // joins instead: the work rides the action's own job and the
+    // per-wave job count collapses to the named actions.
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    // round-6 (verdict #1): the WavePhase timers put 60-75% of the
+    // small-wave floor in DRIVER time, not job execution — dominated
+    // by per-action whole-stage-codegen + expression compilation
+    // (janino), which a <=1024-row wave can never amortize (and wave
+    // plans embed per-wave literals, so the codegen cache misses
+    // every wave). Interpreted execution flips that trade: measured
+    // fixture-crawl steady 7.3s -> ~4s, cold 16.5s -> ~10s. Big
+    // waves keep codegen (it IS the right plan at scale).
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   // main loop (spiderfetch.py:209-231). The reference's `while queue`
   // guard tests the PRE-split queue — a wave still runs (and is counted)
@@ -449,8 +426,7 @@ class CrawlEngine(
   // would destroy the evidence — pay a one-time probe job.
   private def crawlLoop(startRule: Int, startDepth: Int,
                         startQueue: DataFrame, startOuter: DataFrame,
-                        startKnown: Boolean): CrawlTables =
-  try {
+                        startKnown: Boolean): CrawlTables = {
     var queue = startQueue
     var outer = startOuter
     var ruleIdx = startRule
@@ -481,10 +457,21 @@ class CrawlEngine(
           val (fq, sq) = splitQueue(queue, ruleIdx == rules.length - 1)
           queue = fq; outer = sq
         }
-        processWave(queue, rule, ruleIdx, mustRunWave, sizeKnown) match {
+        // lastWaveDiscovered = this queue's size; unknown sizes (resume,
+        // rule entry over the accumulated outer queue) run the big-wave
+        // profile
+        val waveConf =
+          if (sizeKnown && lastWaveDiscovered <= SmallRankRows) SmallWaveConf
+          else Map.empty[String, String]
+        val ran = GraftSession.withConf(spark, waveConf) {
+          processWave(queue, rule, ruleIdx, mustRunWave).map { next =>
+            commitWave(ruleIdx, depth, next, outer)
+            next
+          }
+        }
+        ran match {
           case Some(next) =>
             queue = next
-            commitWave(ruleIdx, depth, queue, outer)
             if (stopAfterWaves.exists(waveNo >= _)) return tables
             // processWave already counted its discoveries — no extra job
             more = lastWaveDiscovered > 0
@@ -496,7 +483,7 @@ class CrawlEngine(
       ruleIdx += 1
     }
     tables
-  } finally restoreConf()
+  }
 
   // split_queue (spiderfetch.py:192-207): two filtered projections, seq kept
   private def splitQueue(queue: DataFrame, lastRule: Boolean): (DataFrame, DataFrame) = {
@@ -528,23 +515,18 @@ class CrawlEngine(
     * KNOWS the reference would run this wave (pre-split queue non-empty),
     * so an empty post-split batch still counts as a (zero-row) wave. */
   private def processWave(queue: DataFrame, rule: RecipeRule,
-                          ruleIdx: Int, mustRunWave: Boolean,
-                          sizeKnown: Boolean): Option[DataFrame] =
+                          ruleIdx: Int, mustRunWave: Boolean): Option[DataFrame] =
     WavePhase.time(spark, "wave_total") {
-      processWave0(queue, rule, ruleIdx, mustRunWave, sizeKnown)
+      processWave0(queue, rule, ruleIdx, mustRunWave)
     }
 
   private def processWave0(queue: DataFrame, rule: RecipeRule,
-                          ruleIdx: Int, mustRunWave: Boolean,
-                          sizeKnown: Boolean): Option[DataFrame] = {
+                          ruleIdx: Int, mustRunWave: Boolean): Option[DataFrame] = {
     waveNo += 1
     waveErrorCount = 0L
     waveBytes = 0L
     waveAppendLocal = true
     wavePartStats = Map.empty
-    // lastWaveDiscovered = this queue's size; unknown sizes (resume, rule
-    // entry over the accumulated outer queue) run the big-wave profile
-    tuneForWaveSize(if (sizeKnown) lastWaveDiscovered else Long.MaxValue)
     val (admitted0, blocked) = Scheduler.robotsFilter(spark, queue, config.robots)
     // robots-empty crawls (the parity config) pay no admission job at all;
     // with robots on, the blocked count also disambiguates "queue empty"

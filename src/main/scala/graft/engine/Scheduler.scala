@@ -80,15 +80,10 @@ object Scheduler {
     * ride the window sorts or the phase-2 exchange, cutting shuffled
     * bytes/URL ~5x. The winning seq ids (budget x hosts rows) broadcast
     * back as a semi-join, so the wide frontier rows are filtered IN PLACE
-    * on their storage partitioning with no shuffle at all. At a chunk size
-    * past broadcast reach (~10^8+), flip the joins to shuffle mode — the
-    * window-side savings stand either way. */
+    * on their storage partitioning with no shuffle at all. */
   def dequeueChunk(pending: DataFrame, perHostBudget: Int,
                    priority: String = "seq",
                    saltBuckets: Int = 16,
-                   broadcastRejoin: Boolean =
-                     !sys.env.get("SPARK_GRAFT_DEQUEUE_SHUFFLE_REJOIN")
-                       .contains("1"),
                    materializeIds: Boolean = true,
                    register: DataFrame => Unit = _ => ()): (DataFrame, DataFrame) = {
     val w1 = Window.partitionBy(col("host"), col("_salt")).orderBy(col(priority))
@@ -116,7 +111,7 @@ object Scheduler {
     // chunk+rest are materialized.
     val cached = if (materializeIds) { val c = chunkIds.persist(); register(c); c }
       else chunkIds
-    val ids = if (broadcastRejoin) broadcast(cached) else cached
+    val ids = broadcast(cached)
     val chunk = pending.join(ids, Seq("seq"), "left_semi")
     val rest = pending.join(ids, Seq("seq"), "left_anti")
     (chunk, rest)

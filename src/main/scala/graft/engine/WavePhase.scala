@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
  *    analysis/optimization, whole-stage codegen, scheduling gaps.
  *
  * `install(spark)` is idempotent per SparkContext; snapshot/reset let a
- * probe (CrawlTime) print a per-run table.
+ * caller print a per-run table.
  */
 object WavePhase {
 

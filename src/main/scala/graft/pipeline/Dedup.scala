@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -316,20 +317,13 @@ object Dedup {
     // the 9-job cascade was ~60% of steady wall (WavePhase table in
     // OPTIMIZATION_r06.md; A/B: 1.2-1.8s vs 1.8-5.1s steady). The gate is
     // DATA size, not host shape: at production scale the big regime keeps
-    // AQE/session settings untouched. SPARK_GRAFT_Q14_SMALL_PROFILE=0
-    // opts out.
-    val smallProfile = nDocs < slimRejoinMinDocs &&
-      !sys.env.get("SPARK_GRAFT_Q14_SMALL_PROFILE").contains("0")
-    val savedConf: Seq[(String, String)] =
-      if (smallProfile) {
-        val keys = Seq("spark.sql.adaptive.enabled",
-          "spark.sql.shuffle.partitions")
-        val saved = keys.map(k => k -> spark.conf.get(k))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        saved
-      } else Nil
-    try {
+    // AQE/session settings untouched.
+    val profile =
+      if (nDocs < slimRejoinMinDocs) Map(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "8")
+      else Map.empty[String, String]
+    GraftSession.withConf(spark, profile) {
     val sigEst = size(filter(zip_with(col("sig_a"), col("sig_b"),
       (x, y) => x === y), b => b)).cast("double") / k
     // Rejoin regime flips on corpus size (count already in hand — no extra
@@ -378,7 +372,7 @@ object Dedup {
     }
     sigs.unpersist(false)
     res
-    } finally savedConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   /** PERSISTABLE near-dup index of a corpus — bucket membership

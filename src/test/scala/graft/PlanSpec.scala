@@ -428,12 +428,10 @@ class PlanSpec extends AnyFunSuite {
       s"combined box must prune: both=$both of $n")
     // both derived-column predicates reach the scan (lift the 100-char
     // metadata truncation so the full PushedFilters list is visible)
-    val savedLen = spark.conf.get("spark.sql.maxMetadataStringLength")
-    val p =
-      try {
-        spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-        plan(Queries.q55ZorderLayout(spark, sf))
-      } finally spark.conf.set("spark.sql.maxMetadataStringLength", savedLen)
+    val p = GraftSession.withConf(spark,
+      Map("spark.sql.maxMetadataStringLength" -> "2000")) {
+      plan(Queries.q55ZorderLayout(spark, sf))
+    }
     assert("PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(day_idx,9".r
       .findFirstIn(p).isDefined, s"day_idx lower bound not pushed:\n$p")
     assert("PushedFilters: \\[[^\\]]*LessThan\\(ubucket,8".r
@@ -441,17 +439,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q56: runtime bloom filter injected into the fact-side scan") {
-    val saved = Queries.runtimeFilterConfs.keys
-      .map(k => k -> scala.util.Try(spark.conf.get(k)).toOption).toMap
-    try {
-      Queries.runtimeFilterConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConf(spark, Queries.runtimeFilterConfs) {
       val p = plan(Queries.runtimeFilterPlan(spark, sf))
       assert(p.toLowerCase.contains("might_contain"),
         s"expected an injected bloom-filter probe on the fact side:\n$p")
       assert(p.contains("SortMergeJoin"),
         s"merge hint must hold (injection targets shuffle joins):\n$p")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 
@@ -546,19 +539,11 @@ class PlanSpec extends AnyFunSuite {
     // handles it at RUNTIME from exchange statistics — both levers must
     // exist at 100 TB. Thresholds lowered so the fixture's hot key
     // (90% of rows, md5-fattened) crosses the skew bar.
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32768")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32768")
+    GraftSession.withConf(spark, Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32768",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32768")) {
       val left = spark.range(0, 200000)
         .select(when(col("id") < 180000, 0L).otherwise(col("id")).as("k"),
           md5(col("id").cast("string")).as("payload"))
@@ -571,9 +556,6 @@ class PlanSpec extends AnyFunSuite {
       val p = j.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE must have split the hot partition:\n$p")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 
