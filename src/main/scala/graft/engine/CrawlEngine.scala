@@ -5,8 +5,9 @@ import graft.model._
 import graft.urlcanon.UrlRewrite
 import graft.extract.Extract
 import graft.seenset.{SeenFilter, SeenSet}
-import graft.tableio.TableIO
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.tableio.{Snapshot, TableIO}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -70,31 +71,46 @@ class CrawlEngine(
 
   private val tries: Int = config.tries
 
-  // ---- mutable driver state (persisted in snapshots) ----
-  private var seen: DataFrame = _
-  private var processed: DataFrame = _
-  private var dumped: DataFrame = _
-  private var edges: DataFrame = _
-  private var aliases: DataFrame = _
-  private var fetchLog: DataFrame = _
-  private var robotsBlocked: DataFrame = _
-  private var metrics: DataFrame = _
-  private var fetched: DataFrame = _  // raw fetched-file log (batch_ord, seq, wave, url)
-  private var seqCounter: Long = 0L
-  private var batchOrd: Long = 0L // sequential batch counter (ord prefix key)
-  private var processedTotal: Long = 0L // rows in `processed` (exact, free)
-  private var waveNo: Int = 0
-  private var waveErrorCount: Long = 0L
-  private var waveBytes: Long = 0L
-  // per-partition (rows, errors, bytes) of the wave's fetch batches (A4)
-  private var wavePartStats: Map[Int, (Long, Long, Long)] = Map.empty
-  private var lastWaveDiscovered: Long = 1L // seed queue is non-empty
-  // true while every append to `seen` this wave came from the driver-local
-  // rank path (the union tree is then all LocalRelation leaves — cheap to
-  // analyze, nothing to recompute, so the per-wave truncation can wait
-  // for the periodic compaction)
-  private var waveAppendLocal: Boolean = true
-  private var sketch: SeenFilter = SeenFilter.empty
+  // ---- crawl state (persisted in snapshots): the append tables as frames
+  // plus the scalar cursor. Per-wave tallies travel in BatchOut/WaveOut.
+  private var frames: Frames = _
+  private var cur: CrawlCursor = _
+
+  /** The nine append-only crawl tables, in snapshot order, each with the
+    * empty frame of a table nothing was appended to yet. Every
+    * materialization, commit and compaction iterates this list. */
+  private val AppendTables: ListMap[String, () => DataFrame] = {
+    def t[T: Encoder](name: String) = name -> (() => spark.emptyDataset[T].toDF)
+    ListMap(t[Seen]("seen"), t[ProcessedRow]("processed"), t[DumpRow]("dump"),
+      t[Edge]("edges"), t[Alias]("aliases"), t[FetchLogEntry]("fetch_log"),
+      t[RobotsBlockedRow]("robots_blocked"), t[WaveMetrics]("metrics"),
+      t[FetchedRaw]("fetched"))
+  }
+
+  // ---- incremental snapshot commits (Iceberg append model): per table,
+  // the DELTA accumulated since the last commit — commitWave writes ONLY
+  // these and the new manifest references the previous snapshot's files,
+  // so per-wave commit cost is O(wave's rows), not O(crawl so far) (the
+  // round-3 full rewrite was O(waves × total) write amplification).
+  // Tracked only in checkpointed mode: in-memory crawls never reset the
+  // delta plans, which would otherwise grow unbounded with depth.
+  /** Append `rows` to table `name`: extends its full frame and its delta. */
+  private def append(name: String, rows: DataFrame): Unit = {
+    val delta =
+      if (checkpoint.isEmpty) frames.delta
+      else frames.delta.updated(name,
+        frames.delta.get(name).fold(rows)(_.unionByName(rows)))
+    frames = frames.copy(
+      full = frames.full.updated(name, frames.full(name).unionByName(rows)),
+      delta = delta)
+  }
+
+  /** Re-read every append table from `snap`, which becomes the base the
+    * next commit appends onto (resume, and the reload after each commit:
+    * it truncates lineage and pins the state to the snapshot). */
+  private def load(io: TableIO, snap: Snapshot): Unit =
+    frames = Frames(AppendTables.map { case (n, _) => n -> io.table(snap, n) },
+      Map.empty, Some(snap))
 
   // Cached DataFrames of in-flight waves (round-2 advice: persists without
   // a matching unpersist accumulate dead blocks over a deep crawl). Every
@@ -109,90 +125,40 @@ class CrawlEngine(
   }
   private val CompactWaves = 8
 
-  // ---- incremental snapshot commits (Iceberg append model): per table,
-  // the DELTA accumulated since the last commit — commitWave writes ONLY
-  // these and the new manifest references the previous snapshot's files,
-  // so per-wave commit cost is O(wave's rows), not O(crawl so far) (the
-  // round-3 full rewrite was O(waves × total) write amplification).
-  // Tracked only in checkpointed mode: in-memory crawls never reset the
-  // delta plans, which would otherwise grow unbounded with depth.
-  private var deltas: Map[String, DataFrame] = Map.empty
-  private var lastSnap: Option[graft.tableio.Snapshot] = None
-  /** Route a table append into its delta; returns `rows` for chaining. */
-  private def appendDelta(name: String, rows: DataFrame): DataFrame = {
-    if (checkpoint.isDefined)
-      deltas = deltas.updated(name,
-        deltas.get(name).map(_.unionByName(rows)).getOrElse(rows))
-    rows
-  }
-  /** Empty-schema frames per snapshot table (delta of an untouched
-    * table; also the schema carrier for a still-empty table's first
-    * commit). */
-  private def emptyTableOf(name: String): DataFrame = name match {
-    case "seen" => spark.emptyDataset[Seen].toDF
-    case "processed" => spark.emptyDataset[ProcessedRow].toDF
-    case "dump" => spark.emptyDataset[DumpRow].toDF
-    case "edges" => spark.emptyDataset[Edge].toDF
-    case "aliases" => spark.emptyDataset[Alias].toDF
-    case "fetch_log" => spark.emptyDataset[FetchLogEntry].toDF
-    case "robots_blocked" => spark.emptyDataset[RobotsBlockedRow].toDF
-    case "metrics" => spark.emptyDataset[WaveMetrics].toDF
-    case "fetched" => spark.emptyDataset[FetchedRaw].toDF
-  }
-  private val AppendTables = Seq("seen", "processed", "dump", "edges",
-    "aliases", "fetch_log", "robots_blocked", "metrics", "fetched")
-
   private def tables: CrawlTables = {
     // LAZY per-table materialization: each base table localCheckpoints on
     // first ACCESS (downstream consumers collect repeatedly), so a caller
     // that only reads `seen` — the bench's crawl path — pays none of the
-    // other tables' checkpoint actions. The wave caches (pins) release
-    // once every base table has materialized; until then they back the
+    // other tables' checkpoint actions. `seen` is never checkpointed here:
+    // the waves already truncate it. The wave caches (pins) release once
+    // every other table has materialized; until then they back the
     // un-materialized unions.
     val inMem = checkpoint.isEmpty
-    var remaining = 7
-    def mat(get: () => DataFrame, set: DataFrame => Unit): () => DataFrame =
-      () => this.synchronized {
-        val d = if (inMem) {
-          val m = get().localCheckpoint(true)
-          set(m)
-          remaining -= 1
-          if (remaining == 0) releasePins()
-          m
-        } else get()
-        d
+    val done = scala.collection.mutable.Set.empty[String]
+    def table(name: String): DataFrame = this.synchronized {
+      if (inMem && name != "seen" && done.add(name)) {
+        frames = frames.copy(full = frames.full.updated(name,
+          frames.full(name).localCheckpoint(true)))
+        if (done.size == AppendTables.size - 1) releasePins()
       }
-    val processedM = mat(() => processed, processed = _)
-    val dumpedM = mat(() => dumped, dumped = _)
-    val aliasesM = mat(() => aliases, aliases = _)
-    val fetchLogM = mat(() => fetchLog, fetchLog = _)
-    val robotsM = mat(() => robotsBlocked, robotsBlocked = _)
-    val metricsM = mat(() => metrics, metrics = _)
-    val edgesM = mat(() => edges, edges = _)
-    // fetched feeds only the derived fetchedNamed below (not counted in
-    // `remaining`: fetchedNamed always materializes processed first)
-    var fetchedDone = false
-    def fetchedM(): DataFrame = this.synchronized {
-      if (inMem && !fetchedDone) { fetched = fetched.localCheckpoint(true); fetchedDone = true }
-      fetched
+      frames.full(name)
     }
     // the global processing order `ord` is assigned ONCE here — the crawl
     // accumulates raw (batch_ord, seq) keys instead of ranking per batch
     // (two Spark actions per batch saved; the key pair is already the
     // total processing order: batches are sequential, seq orders within).
-    // Small crawls rank via the driver-local path (processedTotal is
-    // tracked exactly); big ones via the two-phase rank over the already-
-    // checkpointed parent.
-    lazy val procRanked = withOrderedIndex(processedM(),
+    // Small crawls rank via the driver-local path (the cursor counts
+    // processed rows exactly); big ones via the two-phase rank over the
+    // already-checkpointed parent.
+    lazy val procRanked = withOrderedIndex(table("processed"),
       Seq("batch_ord", "seq"), "ord", 0L,
-      small = processedTotal <= SmallRankRows).df
+      small = cur.processedRows <= SmallRankRows).df
     def processedTable() = procRanked
       .select("wave", "ord", "url", "mode", "retry")
     // collision-safe filenames (ioutils.safe_filename + F8): n-th use of a
     // base name (in processing order) gets suffix ".n"
     def fetchedNamed() = {
-      import spark.implicits._
-      val named = fetchedM()
+      val named = table("fetched")
         .join(procRanked.select(col("batch_ord"), col("seq"), col("ord")),
           Seq("batch_ord", "seq"))
         .select(col("wave"), col("ord"), col("url"))
@@ -207,10 +173,10 @@ class CrawlEngine(
             .otherwise(concat(col("base"), lit("."), col("_n"))))
         .select("wave", "ord", "url", "filename")
     }
-    val seenT = seen // truncated per wave already
-    new CrawlTables(seenT, processedTable(),
-      dumpedM(), edgesM().groupBy("src", "dst").agg(min("wave").as("wave")),
-      aliasesM(), fetchLogM(), robotsM(), metricsM(), fetchedNamed())
+    new CrawlTables(table("seen"), processedTable(), table("dump"),
+      table("edges").groupBy("src", "dst").agg(min("wave").as("wave")),
+      table("aliases"), table("fetch_log"), table("robots_blocked"),
+      table("metrics"), fetchedNamed())
   }
 
   // ---------------------------------------------------------------- utils
@@ -261,7 +227,6 @@ class CrawlEngine(
    */
   private def withOrderedIndex(df: DataFrame, sortCols: Seq[String],
                                name: String, offset: Long,
-                               truncateLineage: Boolean = true,
                                countPred: Option[(Column, org.apache.spark.sql.Row => Boolean)] = None,
                                small: Boolean = false): RankedOut = {
     if (small) {
@@ -294,17 +259,15 @@ class CrawlEngine(
     }
     val pred = countPred.map(_._1).getOrElse(lit(false))
     val keys = sortCols.map(col)
-    // localCheckpoint when the ranked output feeds the NEXT wave's plans —
+    // localCheckpoint: the ranked output feeds the NEXT wave's plans —
     // without truncation the logical plan grows with every wave and
-    // analysis/explain goes quadratic in crawl depth; plain persist when
-    // the output only lands in end-of-crawl accumulators (one less job).
+    // analysis/explain goes quadratic in crawl depth.
     // No explicit partition count: AQE coalesces the range shuffle for
     // tiny waves (task-latency dominated) and widens it for big ones.
-    val sorted = df.repartitionByRange(keys: _*)
+    val mid = df.repartitionByRange(keys: _*)
       .sortWithinPartitions(keys: _*)
       .withColumn("_g_mid", monotonically_increasing_id())
-    val mid = if (truncateLineage) sorted.localCheckpoint(true)
-      else pin(sorted.persist())
+      .localCheckpoint(true)
     val parts = mid.groupBy(shiftright(col("_g_mid"), 33).as("_g_pid"))
       .agg(count(lit(1)).as("_n"), sum(when(pred, 1L).otherwise(0L)).as("_p"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
@@ -328,29 +291,18 @@ class CrawlEngine(
   // ------------------------------------------------------------ lifecycle
 
   def run(): CrawlTables = {
-    seen = Seq(Seen(seedUrl, UrlRewrite.canonicalHost(seedUrl), 0, 0L)).toDF
-    processed = spark.emptyDataset[ProcessedRow].toDF
-    dumped = spark.emptyDataset[DumpRow].toDF
-    edges = spark.emptyDataset[Edge].toDF
-    aliases = spark.emptyDataset[Alias].toDF
-    fetchLog = spark.emptyDataset[FetchLogEntry].toDF
-    robotsBlocked = spark.emptyDataset[RobotsBlockedRow].toDF
-    metrics = spark.emptyDataset[WaveMetrics].toDF
-    fetched = spark.emptyDataset[FetchedRaw].toDF
-    seqCounter = 1L
-    batchOrd = 0L
-    processedTotal = 0L
-    waveNo = 0
+    frames = Frames(AppendTables.map { case (n, empty) => n -> empty() },
+      Map.empty, None)
+    cur = CrawlCursor(ruleIdx = 0, depth = rules.head.depth, wave = 0,
+      seqCounter = 1L, batchOrd = 0L, processedRows = 0L, SeenFilter.empty)
     if (useSketch)
-      sketch.addOne(seedUrl, UrlRewrite.canonicalHost(seedUrl))
-    // the seed row is pre-first-commit content: it IS the first delta
-    deltas = Map.empty
-    lastSnap = None
-    appendDelta("seen", seen)
-    val queue0 = Seq(frontierRow(seedUrl, Mode.SPIDER, 0, 0L)).toDF
+      cur.sketch.addOne(seedUrl, UrlRewrite.canonicalHost(seedUrl))
+    // the seed row is pre-first-commit content: it IS seen's first append
+    append("seen", Seq(Seen(seedUrl, UrlRewrite.canonicalHost(seedUrl), 0, 0L)).toDF)
     // the seed queue's size IS known (1 row): the first wave may use the
     // small-wave execution profile
-    crawlLoop(0, rules.head.depth, queue0, emptyFrontier, startKnown = true)
+    crawlLoop(Seq(frontierRow(seedUrl, Mode.SPIDER, 0, 0L)).toDF, emptyFrontier,
+      size = Some(1L))
   }
 
   /** Resume from the latest snapshot: identical final state to an
@@ -361,29 +313,10 @@ class CrawlEngine(
       throw new IllegalStateException("resume requires a checkpoint TableIO"))
     val snap = io.latest.getOrElse(
       throw new IllegalStateException("no snapshot to resume from"))
-    seen = io.table(snap, "seen"); processed = io.table(snap, "processed")
-    dumped = io.table(snap, "dump"); edges = io.table(snap, "edges")
-    aliases = io.table(snap, "aliases"); fetchLog = io.table(snap, "fetch_log")
-    robotsBlocked = io.table(snap, "robots_blocked")
-    metrics = io.table(snap, "metrics")
-    fetched = io.table(snap, "fetched")
-    seqCounter = snap.meta("seq_counter").toLong
-    batchOrd = snap.meta("batch_ord").toLong
-    // absent in old snapshots: Long.MaxValue keeps the (always-correct)
-    // big-path rank
-    processedTotal = snap.meta.get("processed_rows").map(_.toLong)
-      .getOrElse(Long.MaxValue)
-    waveNo = snap.meta("wave").toInt
-    snap.meta.get("bloom").foreach(b =>
-      sketch = SeenFilter.fromBytes(java.util.Base64.getDecoder.decode(b)))
-    val ruleIdx = snap.meta("rule_idx").toInt
-    val depth = snap.meta("depth").toInt
-    // incremental commits append onto the resumed snapshot's file lists
-    deltas = Map.empty
-    lastSnap = Some(snap)
-    // resumed queue size unknown: first wave runs the big-wave profile
-    crawlLoop(ruleIdx, depth, io.table(snap, "queue"), io.table(snap, "outer_queue"),
-      startKnown = false)
+    load(io, snap)
+    cur = CrawlCursor.fromMeta(snap.meta)
+    // resumed queue size unknown: the first wave runs the big-wave profile
+    crawlLoop(io.table(snap, "queue"), io.table(snap, "outer_queue"), size = None)
   }
 
   // ---- adaptive execution profile: a SMALL wave is pure driver/stage
@@ -416,71 +349,71 @@ class CrawlEngine(
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  // main loop (spiderfetch.py:209-231). The reference's `while queue`
-  // guard tests the PRE-split queue — a wave still runs (and is counted)
-  // when the depth-0 split leaves the fetch half empty. Queue emptiness is
-  // NOT pre-checked with a limit(1).count job on the steady path: after a
-  // wave, `lastWaveDiscovered` answers it for free; only the rare
-  // unknown-emptiness cases (rule entry / resume) let processWave detect
-  // it from its first aggregation (no wave recorded), or — when a split
-  // would destroy the evidence — pay a one-time probe job.
-  private def crawlLoop(startRule: Int, startDepth: Int,
-                        startQueue: DataFrame, startOuter: DataFrame,
-                        startKnown: Boolean): CrawlTables = {
+  // main loop (spiderfetch.py:209-231), entered at the cursor's rule and
+  // depth. `size` is the queue's row count when it is known to be
+  // non-empty: after a wave, its discovered count; for the seed, 1. It is
+  // None when nothing is known — at rule entry (the outer queue can be
+  // large, so the wave must NOT inherit the previous rule's last size and
+  // run the small-wave profile, round-3 advice #2) and at resume. The
+  // reference's `while queue` guard tests the PRE-split queue — a wave
+  // still runs (and is counted) when the depth-0 split leaves the fetch
+  // half empty. Emptiness is NOT pre-checked with a limit(1).count job on
+  // the steady path: an unknown queue lets processWave detect it from its
+  // first aggregation (no wave recorded), or — when a split would destroy
+  // the evidence — pays a one-time probe job.
+  private def crawlLoop(startQueue: DataFrame, startOuter: DataFrame,
+                        size: Option[Long]): CrawlTables = {
     var queue = startQueue
     var outer = startOuter
-    var ruleIdx = startRule
-    var depth = startDepth
-    var resuming = true
-    while (ruleIdx < rules.length) {
-      val rule = rules(ruleIdx)
-      if (!resuming) { queue = outer; outer = emptyFrontier; depth = rule.depth }
-      // is the CURRENT queue known to be non-empty (and its size known via
-      // lastWaveDiscovered)? false at rule entry (outer queue contents
-      // unknown — its size can be large, so the wave must NOT inherit the
-      // previous rule's final lastWaveDiscovered == 0 and run the
-      // small-wave profile, round-3 advice #2) and at resume; run() vouches
-      // for the 1-row seed queue via startKnown.
-      var known = resuming && startKnown
-      resuming = false
+    var known = size
+    while (cur.ruleIdx < rules.length) {
+      val rule = rules(cur.ruleIdx)
       var more = true
       while (more) {
-        // size knowledge is decided BEFORE any depth-0 emptiness probe
-        // (the probe proves non-emptiness, not size)
-        val sizeKnown = known
-        var mustRunWave = known
-        if (depth > 0) depth -= 1
-        else {
-          // pre-split emptiness decides whether a wave runs; probe only
-          // when unknown (rule entry with a depth-0 rule)
-          if (!known) mustRunWave = queue.limit(1).count() > 0
-          val (fq, sq) = splitQueue(queue, ruleIdx == rules.length - 1)
-          queue = fq; outer = sq
-        }
-        // lastWaveDiscovered = this queue's size; unknown sizes (resume,
-        // rule entry over the accumulated outer queue) run the big-wave
-        // profile
-        val waveConf =
-          if (sizeKnown && lastWaveDiscovered <= SmallRankRows) SmallWaveConf
-          else Map.empty[String, String]
-        val ran = GraftSession.withConf(spark, waveConf) {
-          processWave(queue, rule, ruleIdx, mustRunWave).map { next =>
-            commitWave(ruleIdx, depth, next, outer)
-            next
+        // pre-split emptiness decides whether a wave runs; at depth 0 an
+        // unknown queue is probed (rule entry with a depth-0 rule, resume
+        // right after a rule's split wave). The probe proves non-emptiness,
+        // not size: `known` stays None.
+        val mustRunWave = known.isDefined ||
+          (cur.depth == 0 && queue.limit(1).count() > 0)
+        val ran =
+          // the reference splits only a non-empty queue: an empty one
+          // keeps the outer queue for the next rule
+          if (cur.depth == 0 && !mustRunWave) None
+          else {
+            if (cur.depth > 0) cur = cur.copy(depth = cur.depth - 1)
+            else {
+              val (fq, sq) = splitQueue(queue, cur.ruleIdx == rules.length - 1)
+              queue = fq; outer = sq
+            }
+            val waveConf =
+              if (known.exists(_ <= SmallRankRows)) SmallWaveConf
+              else Map.empty[String, String]
+            GraftSession.withConf(spark, waveConf) {
+              processWave(queue, rule, mustRunWave).map { w =>
+                commitWave(w.next, outer, w.appendLocal)
+                w
+              }
+            }
           }
-        }
         ran match {
-          case Some(next) =>
-            queue = next
-            if (stopAfterWaves.exists(waveNo >= _)) return tables
+          case Some(w) =>
+            queue = w.next
+            if (stopAfterWaves.exists(cur.wave >= _)) return tables
             // processWave already counted its discoveries — no extra job
-            more = lastWaveDiscovered > 0
-            known = more
+            known = Some(w.discoveredN).filter(_ > 0)
+            more = known.isDefined
           case None => // queue was empty: no wave ran, rule is done
             more = false
         }
       }
-      ruleIdx += 1
+      val next = cur.ruleIdx + 1
+      cur = cur.copy(ruleIdx = next)
+      if (next < rules.length) {
+        // rule entry: the outer queue becomes the queue, its size unknown
+        cur = cur.copy(depth = rules(next).depth)
+        queue = outer; outer = emptyFrontier; known = None
+      }
     }
     tables
   }
@@ -501,32 +434,42 @@ class CrawlEngine(
   // ------------------------------------------------------------ wave body
 
   /** One batch's outputs: the next-wave fragment, this wave's retry
-    * records, and the counts the caller needs (all derived from jobs the
-    * batch runs anyway — no follow-up count actions). */
+    * records, the counts the caller needs (all derived from jobs the batch
+    * runs anyway — no follow-up count actions), and the batch's share of
+    * the wave tallies: errors, completed-fetch bytes, per-partition
+    * (rows, errors, bytes) of the fetch join (A4), and whether every
+    * append to `seen` came from the driver-local rank path. */
   private final case class BatchOut(
       discovered: DataFrame, retries: DataFrame,
-      rows: Long, discoveredN: Long, retryN: Long)
+      rows: Long, discoveredN: Long, retryN: Long,
+      errors: Long = 0L, bytes: Long = 0L,
+      partStats: Map[Int, (Long, Long, Long)] = Map.empty,
+      appendLocal: Boolean = true)
   private def emptyBatch =
     BatchOut(emptyFrontier, emptyFrontier, 0L, 0L, 0L)
 
-  /** Runs one wave; returns the next queue, or None when no wave ran —
-    * the reference's `while queue` guard, detected from the batch
-    * aggregation instead of a pre-count job. `mustRunWave` = the caller
-    * KNOWS the reference would run this wave (pre-split queue non-empty),
-    * so an empty post-split batch still counts as a (zero-row) wave. */
+  /** One wave's outputs: the next queue, its row count, and whether the
+    * wave's `seen` appends were all driver-local relations (the union tree
+    * is then all LocalRelation leaves — cheap to analyze, nothing to
+    * recompute, so the per-wave truncation can wait for the periodic
+    * compaction). */
+  private final case class WaveOut(next: DataFrame, discoveredN: Long,
+                                   appendLocal: Boolean)
+
+  /** Runs one wave; returns its outputs, or None when no wave ran — the
+    * reference's `while queue` guard, detected from the batch aggregation
+    * instead of a pre-count job. `mustRunWave` = the caller KNOWS the
+    * reference would run this wave (pre-split queue non-empty), so an
+    * empty post-split batch still counts as a (zero-row) wave. */
   private def processWave(queue: DataFrame, rule: RecipeRule,
-                          ruleIdx: Int, mustRunWave: Boolean): Option[DataFrame] =
+                          mustRunWave: Boolean): Option[WaveOut] =
     WavePhase.time(spark, "wave_total") {
-      processWave0(queue, rule, ruleIdx, mustRunWave)
+      processWave0(queue, rule, mustRunWave)
     }
 
   private def processWave0(queue: DataFrame, rule: RecipeRule,
-                          ruleIdx: Int, mustRunWave: Boolean): Option[DataFrame] = {
-    waveNo += 1
-    waveErrorCount = 0L
-    waveBytes = 0L
-    waveAppendLocal = true
-    wavePartStats = Map.empty
+                           mustRunWave: Boolean): Option[WaveOut] = {
+    val wave = cur.wave + 1
     val (admitted0, blocked) = Scheduler.robotsFilter(spark, queue, config.robots)
     // robots-empty crawls (the parity config) pay no admission job at all;
     // with robots on, the blocked count also disambiguates "queue empty"
@@ -537,44 +480,39 @@ class CrawlEngine(
       else {
         val n = blocked.count()
         if (n > 0)
-          robotsBlocked = robotsBlocked.unionByName(appendDelta("robots_blocked",
-            blocked.select(lit(waveNo).as("wave"), col("url"), col("seq"))))
+          append("robots_blocked",
+            blocked.select(lit(wave).as("wave"), col("url"), col("seq")))
         n
       }
 
+    val batches = scala.collection.mutable.ArrayBuffer.empty[BatchOut]
     var discovered = emptyFrontier
     var frontierRows = 0L
-    var waveDiscovered = 0L
     config.perHostBudget match {
       case None =>
-        val b1 = processBatch(admitted0, rule)
-        if (b1.rows == 0 && blockedN == 0 && !mustRunWave) {
-          waveNo -= 1 // nothing was recorded: the wave never happened
-          return None
-        }
+        val b1 = processBatch(admitted0, rule, wave)
+        // nothing was recorded: the wave never happened
+        if (b1.rows == 0 && blockedN == 0 && !mustRunWave) return None
         frontierRows = b1.rows
         // retry count is exact (from the batch aggregation), so an empty
         // retry sub-batch is skipped without any probe job
-        val b2 = if (b1.retryN == 0) emptyBatch else processBatch(b1.retries, rule)
+        val b2 = if (b1.retryN == 0) emptyBatch else processBatch(b1.retries, rule, wave)
+        batches += b1 += b2
         discovered = b1.discovered.unionByName(b2.discovered)
-        waveDiscovered = b1.discoveredN + b2.discoveredN
       case Some(k) =>
         // localCheckpoint, not persist: `rest` references `pending` on
         // both join sides, so without truncation the logical plan doubles
         // every chunk iteration (analysis goes exponential in chunks)
         var pending = admitted0.localCheckpoint(true)
         var pendingCount = pending.count()
-        if (pendingCount == 0 && blockedN == 0 && !mustRunWave) {
-          waveNo -= 1
-          return None
-        }
+        if (pendingCount == 0 && blockedN == 0 && !mustRunWave) return None
         frontierRows = pendingCount
         while (pendingCount > 0) {
           val (chunk, rest) = Scheduler.dequeueChunk(pending, k, register = pin)
           // top-k of a non-empty pending set is non-empty
-          val b = processBatch(chunk, rule)
+          val b = processBatch(chunk, rule, wave)
+          batches += b
           discovered = discovered.unionByName(b.discovered)
-          waveDiscovered += b.discoveredN
           pending = (if (b.retryN == 0) rest
             else rest.unionByName(b.retries)).localCheckpoint(true)
           // arithmetic instead of a count job: chunk rows leave pending,
@@ -582,19 +520,21 @@ class CrawlEngine(
           pendingCount = pendingCount - b.rows + b.retryN
         }
     }
+    cur = cur.copy(wave = wave)
 
     // per-partition lineage metrics (north rule): rows fetched, errors and
     // completed bytes per physical partition of the wave's fetch join (A4)
-    lastWaveDiscovered = waveDiscovered
-    val partRows = wavePartStats.toSeq.sortBy(_._1).map { case (pid, (n, e, b)) =>
-      WaveMetrics(waveNo, ruleIdx, pid, n, n, e, 0L, b)
-    }
-    val totalRow = WaveMetrics(waveNo, ruleIdx, -1, frontierRows, frontierRows,
-      waveErrorCount, waveDiscovered, waveBytes)
-    metrics = metrics.unionByName(
-      appendDelta("metrics", (partRows :+ totalRow).toDF))
+    val discoveredN = batches.map(_.discoveredN).sum
+    val partRows = batches.flatMap(_.partStats)
+      .groupMapReduce(_._1)(_._2)((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+      .toSeq.sortBy(_._1).map { case (pid, (n, e, b)) =>
+        WaveMetrics(wave, cur.ruleIdx, pid, n, n, e, 0L, b)
+      }
+    val totalRow = WaveMetrics(wave, cur.ruleIdx, -1, frontierRows, frontierRows,
+      batches.map(_.errors).sum, discoveredN, batches.map(_.bytes).sum)
+    append("metrics", (partRows :+ totalRow).toDF)
 
-    Some(discovered)
+    Some(WaveOut(discovered, discoveredN, batches.forall(_.appendLocal)))
   }
 
   /**
@@ -606,7 +546,8 @@ class CrawlEngine(
    * computed analytically by RedirectResolver — jobs per wave scale with
    * the longest redirect chain, not with the number of redirects.
    */
-  private def processBatch(records: DataFrame, rule: RecipeRule): BatchOut = {
+  private def processBatch(records: DataFrame, rule: RecipeRule,
+                           wave: Int): BatchOut = {
     val joinedBase = records.join(corpusN, col("url") === col("doc_id"), "left")
     val joined = pin((config.resumeState match {
       case Nil => joinedBase.withColumn("_resume_err", lit(null).cast("int"))
@@ -637,20 +578,17 @@ class CrawlEngine(
       return emptyBatch
     }
     val batchRows = batchStats.map(_.getLong(1)).sum
-    // saturating: resume from an old snapshot sets processedTotal =
+    // saturating: resume from an old snapshot sets processedRows =
     // Long.MaxValue ("unknown, keep the big-path rank") — a plain += would
     // overflow negative and route the rank through the driver-local
     // collect path on a large resumed crawl (round-3 advice #1)
-    processedTotal =
-      if (processedTotal > Long.MaxValue - batchRows) Long.MaxValue
-      else processedTotal + batchRows
-    batchStats.foreach { r =>
-      val prev = wavePartStats.getOrElse(r.getInt(0), (0L, 0L, 0L))
-      wavePartStats += r.getInt(0) ->
-        (prev._1 + r.getLong(1), prev._2 + r.getLong(2), prev._3 + r.getLong(5))
-    }
-    waveErrorCount += batchStats.map(_.getLong(2)).sum
-    waveBytes += batchStats.map(_.getLong(5)).sum
+    cur = cur.copy(processedRows =
+      if (cur.processedRows > Long.MaxValue - batchRows) Long.MaxValue
+      else cur.processedRows + batchRows)
+    val partStats = batchStats.map(r =>
+      r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(5))).toMap
+    var errors = batchStats.map(_.getLong(2)).sum
+    var bytes = batchStats.map(_.getLong(5)).sum
 
     val redirects = joined.filter(col("outcome") === ErrorCode.REDIRECT)
     val hasRedirects = batchStats.map(_.getLong(3)).sum > 0
@@ -668,8 +606,9 @@ class CrawlEngine(
     val analysis =
       if (hasRedirects)
         Some(WavePhase.time(spark, "redirect_analyze") {
-          RedirectResolver.analyze(spark, redirects, corpusN, seen, rule,
-            hostFilterEnabled, docs => qualifyCandidates(docs, rule),
+          RedirectResolver.analyze(spark, redirects, corpusN,
+            frames.full("seen"), rule, hostFilterEnabled,
+            docs => qualifyCandidates(docs, rule),
             nonRedirectCands, tries,
             small = batchRows <= SmallRankRows)
         })
@@ -683,48 +622,48 @@ class CrawlEngine(
     // lazily under the (batch_ord, seq) total order; the dense global
     // `ord` is ranked once at tables() — no per-batch ranking actions
     WavePhase.time(spark, "logs_build") {
-    processed = processed.unionByName(appendDelta("processed",
-      joined.select(lit(batchOrd).as("batch_ord"), col("seq"),
-        lit(waveNo).as("wave"), col("url"), col("mode"), col("retry"))))
+    append("processed",
+      joined.select(lit(cur.batchOrd).as("batch_ord"), col("seq"),
+        lit(wave).as("wave"), col("url"), col("mode"), col("retry")))
 
     // ---- fetch log: every LAUNCH of every record (in-fetch TRIES retries
     // expand to one row per temporal launch, fetch.py:650-664) + each
     // reached chain hop's launches
     val originLog = CrawlEngine.expandFetchLog(
-      joined.select(col("url"), col("mode"), lit(waveNo).as("wave"),
+      joined.select(col("url"), col("mode"), lit(wave).as("wave"),
         col("attempt"), col("outcome"), col("fail_attempts")), tries)
     val logAll = analysis match {
       case Some(a) => originLog.unionByName(CrawlEngine.expandFetchLog(
         a.validHops.select(col("alias_url").as("url"), col("mode"),
-          lit(waveNo).as("wave"), col("attempt"),
+          lit(wave).as("wave"), col("attempt"),
           col("to_outcome").as("outcome"),
           col("to_fail").as("fail_attempts")), tries))
       case None => originLog
     }
-    fetchLog = fetchLog.unionByName(appendDelta("fetch_log", logAll))
+    append("fetch_log", logAll)
 
     // ---- S5 fetched-file sink: FETCH-mode records move their file to a
     // collision-safe final name (spiderfetch.py:163-165); redirected
     // fetches land under the chain's FINAL url, dup-aborted records don't
-    fetched = fetched.unionByName(appendDelta("fetched",
+    append("fetched",
       joined.filter(col("mode") === Mode.FETCH &&
           col("outcome") =!= ErrorCode.REDIRECT)
-        .select(lit(batchOrd).as("batch_ord"), col("seq"),
-          lit(waveNo).as("wave"), col("url"))))
+        .select(lit(cur.batchOrd).as("batch_ord"), col("seq"),
+          lit(wave).as("wave"), col("url")))
     analysis.foreach { a =>
-      fetched = fetched.unionByName(appendDelta("fetched",
+      append("fetched",
         a.finals.filter(col("mode") === Mode.FETCH && !col("aborted"))
-          .select(lit(batchOrd).as("batch_ord"), col("seq"),
-            lit(waveNo).as("wave"), col("final_url").as("url"))))
+          .select(lit(cur.batchOrd).as("batch_ord"), col("seq"),
+            lit(wave).as("wave"), col("final_url").as("url")))
     }
-    batchOrd += 1
+    cur = cur.copy(batchOrd = cur.batchOrd + 1)
 
     // ---- edges: every matched url, seen or not, self-loops excluded
     // (web.py:44-50)
-    edges = edges.unionByName(appendDelta("edges",
+    append("edges",
       allCands.filter(col("url") =!= col("parent_url"))
         .select(col("parent_url").as("src"), col("url").as("dst"),
-          lit(waveNo).as("wave"))))
+          lit(wave).as("wave")))
     }
 
     // ---- discoveries: O4 first-wins within the batch, J1 exact dedup vs
@@ -740,8 +679,8 @@ class CrawlEngine(
       val fw = allCands
         .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
         .drop("_rn")
-      (fw, SeenSet.filterNew(spark, fw, seen, "url",
-        if (useSketch) Some(sketch) else None, register = pin))
+      (fw, SeenSet.filterNew(spark, fw, frames.full("seen"), "url",
+        if (useSketch) Some(cur.sketch) else None, register = pin))
     }
     val freshReal = analysis match {
       case Some(a) =>
@@ -779,7 +718,7 @@ class CrawlEngine(
     // the former discovered.count() job
     val rk = WavePhase.time(spark, "event_rank") {
       withOrderedIndex(events,
-        Seq("pos", "phase", "idx"), "new_seq", seqCounter,
+        Seq("pos", "phase", "idx"), "new_seq", cur.seqCounter,
         countPred = Some((col("m_fetch") || col("m_spider"),
           (r: org.apache.spark.sql.Row) =>
             r.getAs[Boolean]("m_fetch") || r.getAs[Boolean]("m_spider"))),
@@ -788,13 +727,12 @@ class CrawlEngine(
     val ranked = rk.df
     val nNew = rk.total
     val discoveredN = rk.predN
-    if (rk.localRows.isEmpty) waveAppendLocal = false
-    seqCounter += nNew
+    cur = cur.copy(seqCounter = cur.seqCounter + nNew)
 
     WavePhase.time(spark, "post_rank_build") {
-    seen = seen.unionByName(appendDelta("seen", ranked.select(col("url"),
-      col("host").as("canonicalHost"), lit(waveNo).as("wave"),
-      col("new_seq").as("seq"))))
+    append("seen", ranked.select(col("url"),
+      col("host").as("canonicalHost"), lit(wave).as("wave"),
+      col("new_seq").as("seq")))
     }
     if (useSketch && nNew > 0) WavePhase.time(spark, "sketch_add") {
       rk.localRows match {
@@ -802,8 +740,8 @@ class CrawlEngine(
           // the rank already collected the rows — fold them into the bank
           // driver-side instead of paying a build-aggregation job
           rows.foreach(r =>
-            sketch.addOne(r.getAs[String]("url"), r.getAs[String]("host")))
-        case None => sketch.add(spark, ranked, "url", "host")
+            cur.sketch.addOne(r.getAs[String]("url"), r.getAs[String]("host")))
+        case None => cur.sketch.add(spark, ranked, "url", "host")
       }
     }
 
@@ -813,29 +751,29 @@ class CrawlEngine(
       rk.localRows match {
         case Some(rows) =>
           val hops = rows.filter(_.getAs[Int]("phase") == 0)
-          waveErrorCount += hops.count(_.getAs[Int]("a_outcome") != ErrorCode.NONE)
-          waveBytes += hops.filter(_.getAs[Int]("a_outcome") == ErrorCode.NONE)
+          errors += hops.count(_.getAs[Int]("a_outcome") != ErrorCode.NONE)
+          bytes += hops.filter(_.getAs[Int]("a_outcome") == ErrorCode.NONE)
             .map(_.getAs[Long]("a_len")).sum
         case None =>
           val r = a.validHops.agg(
             sum(when(col("to_outcome") =!= ErrorCode.NONE, 1L).otherwise(0L)),
             sum(when(col("to_outcome") === ErrorCode.NONE, col("to_len"))
               .otherwise(0L))).collect()(0)
-          if (!r.isNullAt(0)) waveErrorCount += r.getLong(0)
-          if (!r.isNullAt(1)) waveBytes += r.getLong(1)
+          if (!r.isNullAt(0)) errors += r.getLong(0)
+          if (!r.isNullAt(1)) bytes += r.getLong(1)
       }
     }
 
     analysis.foreach { a =>
-      aliases = aliases.unionByName(appendDelta("aliases", a.validHops.select(
+      append("aliases", a.validHops.select(
         col("origin_url").as("canonicalUrl"), col("alias_url").as("aliasUrl"),
-        lit(waveNo).as("wave"))))
+        lit(wave).as("wave")))
     }
 
     val discovered = WavePhase.time(spark, "post_rank_build") {
-    dumped = dumped.unionByName(appendDelta("dump",
+    append("dump",
       ranked.filter(col("m_dump"))
-        .select(col("new_seq").as("seq"), lit(waveNo).as("wave"), col("url"))))
+        .select(col("new_seq").as("seq"), lit(wave).as("wave"), col("url")))
 
     ranked
       .filter(col("m_fetch") || col("m_spider"))
@@ -843,7 +781,7 @@ class CrawlEngine(
         when(col("m_fetch") && col("m_spider"), Mode.SPIDER_FETCH)
           .when(col("m_fetch"), Mode.FETCH)
           .otherwise(Mode.SPIDER).as("mode"),
-        lit(waveNo).as("wave"), col("new_seq").as("seq"),
+        lit(wave).as("wave"), col("new_seq").as("seq"),
         lit(false).as("retry"), lit(0).as("attempt"))
     }
 
@@ -883,7 +821,8 @@ class CrawlEngine(
         (retryNR.unionByName(chainRetries), temporalN + chainN)
       case None => (retryNR, temporalN)
     }
-    BatchOut(discovered, retries, batchRows, discoveredN, retryN)
+    BatchOut(discovered, retries, batchRows, discoveredN, retryN,
+      errors, bytes, partStats, appendLocal = rk.localRows.isDefined)
   }
 
   /**
@@ -942,19 +881,14 @@ class CrawlEngine(
   /** (total seconds spent committing snapshots, number of commits). */
   def commitStats: (Double, Int) = (commitNanos / 1e9, commitCount)
 
-  private def commitWave(ruleIdx: Int, depth: Int,
-                         queue: DataFrame, outer: DataFrame): Unit = {
-    val commitT0 = System.nanoTime()
+  private def commitWave(queue: DataFrame, outer: DataFrame,
+                         appendLocal: Boolean): Unit = {
+    // every CompactWaves-th wave compacts: see both branches below
+    val compact = cur.wave % CompactWaves == 0
     checkpoint match {
       case Some(io) =>
         import graft.tableio.TableWrite
-        val meta = Map(
-          "rule_idx" -> ruleIdx.toString, "depth" -> depth.toString,
-          "wave" -> waveNo.toString, "seq_counter" -> seqCounter.toString,
-          "batch_ord" -> batchOrd.toString,
-          "processed_rows" -> processedTotal.toString) ++
-          sketch.serialized.map(b => "bloom" ->
-            java.util.Base64.getEncoder.encodeToString(b))
+        val commitT0 = System.nanoTime()
         // APPEND commits (Iceberg model): only this wave's deltas are
         // written; the manifest references the previous snapshot's files.
         // Per-wave commit cost is O(wave), not O(crawl so far). Every
@@ -962,43 +896,24 @@ class CrawlEngine(
         // file list) so manifests and per-table file counts stay bounded
         // by the window, not the crawl depth — amortized O(total/window)
         // per wave, the standard Iceberg rewrite-data-files maintenance.
-        val compact = waveNo % CompactWaves == 0
-        def prevOf(name: String) = lastSnap.flatMap(_.tables.get(name))
-          .map(t => (t.files, t.rows)).getOrElse((Nil, 0L))
-        val fullOf: Map[String, DataFrame] = Map(
-          "seen" -> seen, "processed" -> processed, "dump" -> dumped,
-          "edges" -> edges, "aliases" -> aliases, "fetch_log" -> fetchLog,
-          "robots_blocked" -> robotsBlocked, "metrics" -> metrics,
-          "fetched" -> fetched)
-        val appendWrites = AppendTables.map { name =>
-          if (compact) name -> TableWrite(fullOf(name))
-          else {
-            val (pf, pr) = prevOf(name)
-            name -> TableWrite(deltas.getOrElse(name, emptyTableOf(name)), pf, pr)
-          }
-        }.toMap
+        def write(name: String, full: => DataFrame, delta: => DataFrame) =
+          if (compact) TableWrite(full)
+          else frames.base.flatMap(_.tables.get(name))
+            .fold(TableWrite(delta))(t => TableWrite(delta, t.files, t.rows))
+        def deltaOf(name: String) =
+          frames.delta.getOrElse(name, AppendTables(name)())
+        val appendWrites = AppendTables.keys.map(name =>
+          name -> write(name, frames.full(name), deltaOf(name))).toMap
         // S2 fetch-state rows derive per fetched url (append-only too):
         // only the wave's newly fetched urls get state rows this commit
-        val stateWrite =
-          if (compact) TableWrite(FetchResume.stateOf(spark, fetched, corpusN))
-          else {
-            val (sf, sr) = prevOf("fetch_state")
-            TableWrite(FetchResume.stateOf(spark,
-              deltas.getOrElse("fetched", emptyTableOf("fetched")), corpusN), sf, sr)
-          }
-        val snap = io.commitWrites(meta, appendWrites ++ Map(
+        val stateWrite = write("fetch_state",
+          FetchResume.stateOf(spark, frames.full("fetched"), corpusN),
+          FetchResume.stateOf(spark, deltaOf("fetched"), corpusN))
+        val snap = io.commitWrites(cur.toMeta, appendWrites ++ Map(
           // the frontier queues change wholly each wave: full writes
           "queue" -> TableWrite(queue), "outer_queue" -> TableWrite(outer),
           "fetch_state" -> stateWrite))
-        // reload: truncates lineage, pins state to the snapshot
-        seen = io.table(snap, "seen"); processed = io.table(snap, "processed")
-        dumped = io.table(snap, "dump"); edges = io.table(snap, "edges")
-        aliases = io.table(snap, "aliases"); fetchLog = io.table(snap, "fetch_log")
-        robotsBlocked = io.table(snap, "robots_blocked")
-        metrics = io.table(snap, "metrics")
-        fetched = io.table(snap, "fetched")
-        deltas = Map.empty
-        lastSnap = Some(snap)
+        load(io, snap)
         // the commit wrote (= materialized) every consumer of this wave's
         // cached frames; release them before the next wave
         releasePins()
@@ -1009,33 +924,60 @@ class CrawlEngine(
         // anti-joins, redirect dup checks) — eager-truncate just it per
         // wave UNLESS this wave appended only driver-local relations (no
         // job; the periodic compaction below still bounds the union
-        // depth); append-only tables stay lazy and materialize once in
-        // tables() at the end — EXCEPT on deep crawls, where the lazy
-        // unions would keep every wave's caches pinned: compact every
-        // CompactWaves waves (checkpoint the accumulators, release pins)
-        // so block-manager storage stays bounded by the window, not the
-        // crawl depth (round-2 advice #1)
-        if (!waveAppendLocal) WavePhase.time(spark, "seen_truncate") {
-          seen = seen.localCheckpoint(true)
+        // depth) or the compaction checkpoints it anyway; append-only
+        // tables stay lazy and materialize once in tables() — EXCEPT on
+        // deep crawls, where the lazy unions would keep every wave's
+        // caches pinned: compact every CompactWaves waves (checkpoint
+        // every table, release pins) so block-manager storage stays
+        // bounded by the window, not the crawl depth (round-2 advice #1)
+        if (!appendLocal && !compact) WavePhase.time(spark, "seen_truncate") {
+          frames = frames.copy(full = frames.full.updated("seen",
+            frames.full("seen").localCheckpoint(true)))
         }
-        if (waveNo % CompactWaves == 0) WavePhase.time(spark, "compaction") {
-          seen = seen.localCheckpoint(true)
-          processed = processed.localCheckpoint(true)
-          dumped = dumped.localCheckpoint(true)
-          aliases = aliases.localCheckpoint(true)
-          fetchLog = fetchLog.localCheckpoint(true)
-          robotsBlocked = robotsBlocked.localCheckpoint(true)
-          metrics = metrics.localCheckpoint(true)
-          edges = edges.localCheckpoint(true)
-          fetched = fetched.localCheckpoint(true)
+        if (compact) WavePhase.time(spark, "compaction") {
+          frames = frames.copy(full = AppendTables.keys.map(name =>
+            name -> frames.full(name).localCheckpoint(true)).toMap)
           releasePins()
         }
     }
     // adaptive sketch sizing (SURVEY §4.4): shards past their sizing have
     // degraded FPP — rebuild the bank from the exact table at 4x capacity
-    if (useSketch && sketch.needsRebuild)
-      sketch.rebuildFrom(spark, seen, "url", "canonicalHost")
+    if (useSketch && cur.sketch.needsRebuild)
+      cur.sketch.rebuildFrom(spark, frames.full("seen"), "url", "canonicalHost")
   }
+}
+
+/** The append tables as frames: `full` per table, and — checkpointed mode
+  * only — `delta`, the rows appended since `base`, the last commit. */
+private final case class Frames(full: Map[String, DataFrame],
+                                delta: Map[String, DataFrame],
+                                base: Option[Snapshot])
+
+/** The crawl's scalar state, stored as snapshot meta: the loop's position
+  * (rule, depth, waves run), the next discovery rank, the next batch
+  * ordinal, the processed-row count (which picks the ord rank path) and the
+  * seen sketch (mutable; serialized into the meta). */
+private[engine] final case class CrawlCursor(
+    ruleIdx: Int, depth: Int, wave: Int, seqCounter: Long, batchOrd: Long,
+    processedRows: Long, sketch: SeenFilter) {
+  def toMeta: Map[String, String] = Map(
+    "rule_idx" -> ruleIdx.toString, "depth" -> depth.toString,
+    "wave" -> wave.toString, "seq_counter" -> seqCounter.toString,
+    "batch_ord" -> batchOrd.toString,
+    "processed_rows" -> processedRows.toString) ++
+    sketch.serialized.map(b => "bloom" ->
+      java.util.Base64.getEncoder.encodeToString(b))
+}
+
+private[engine] object CrawlCursor {
+  def fromMeta(meta: Map[String, String]): CrawlCursor = CrawlCursor(
+    meta("rule_idx").toInt, meta("depth").toInt, meta("wave").toInt,
+    meta("seq_counter").toLong, meta("batch_ord").toLong,
+    // absent in old snapshots: Long.MaxValue keeps the (always-correct)
+    // big-path rank
+    meta.get("processed_rows").fold(Long.MaxValue)(_.toLong),
+    meta.get("bloom").fold(SeenFilter.empty)(b =>
+      SeenFilter.fromBytes(java.util.Base64.getDecoder.decode(b))))
 }
 
 object CrawlEngine {

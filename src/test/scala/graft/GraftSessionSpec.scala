@@ -2,13 +2,10 @@ package graft
 
 import graft.engine.CrawlEngine
 import graft.fixtures.FixtureCorpus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.Properties
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /**
  * `GraftSession.withConf` leaves the session as it found it (set keys get
@@ -75,25 +72,21 @@ class GraftSessionSpec extends AnyFunSuite {
     val engine = new CrawlEngine(spark,
       FixtureCorpus.generate(params).toDF, FixtureCorpus.seedUrl(params),
       Queries.fixtureRules, useSketch = true)
-    val jobs = new ConcurrentLinkedQueue[(String, Properties)]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).foreach(p => jobs.add((p.getProperty(Step), p)))
-    }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try GraftSession.withConf(spark, Map(Parts -> "7")) {
-      val before = spark.conf.getAll
-      sc.setLocalProperty(Step, "crawl")
-      val tables = engine.run()
-      val after = spark.conf.getAll
-      sc.setLocalProperty(Step, "after")
-      val waveRows = tables.metrics.filter(col("partitionId") === -1)
-        .select("frontierRows").as[Long].collect().toSeq
-      sc.setLocalProperty(Step, null)
-      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc, 30000L)
-      Crawl(before, after, waveRows, jobs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
+    val ((before, after, waveRows), jobs) = SparkTestSession.recordJobs {
+      GraftSession.withConf(spark, Map(Parts -> "7")) {
+        val before = spark.conf.getAll
+        sc.setLocalProperty(Step, "crawl")
+        val tables = engine.run()
+        val after = spark.conf.getAll
+        sc.setLocalProperty(Step, "after")
+        val waveRows = tables.metrics.filter(col("partitionId") === -1)
+          .select("frontierRows").as[Long].collect().toSeq
+        sc.setLocalProperty(Step, null)
+        (before, after, waveRows)
+      }
+    }
+    Crawl(before, after, waveRows, jobs.map(p => (p.getProperty(Step), p)))
   }
 
   /** Jobs of SQL executions at one step (RDD-level jobs carry no SQL conf). */

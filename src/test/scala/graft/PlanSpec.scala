@@ -221,25 +221,10 @@ class PlanSpec extends AnyFunSuite {
     // invocation to size cells/bits. With n supplied (parquet footers /
     // manifest), building the lshTopK plan runs ZERO jobs and ivfTopK
     // runs exactly one fewer action than the count() fallback.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    def countActions(body: => Unit): Int = {
-      val execIds = scala.collection.concurrent.TrieMap.empty[String, Unit]
-      val rddJobs = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          val id = j.properties.getProperty("spark.sql.execution.id")
-          if (id == null) rddJobs.incrementAndGet() else execIds.put(id, ())
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      // drain the async listener bus deterministically before reading the
-      // counters — a fixed sleep made the exact-count asserts flaky on a
-      // loaded host (round-4 advice #5)
-      try { body; org.apache.spark.GraftListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext, 30000L) }
-      finally spark.sparkContext.removeSparkListener(l)
-      execIds.size + rddJobs.get
-    }
+    // the helper drains the async listener bus deterministically before
+    // counting — a fixed sleep made the exact-count asserts flaky on a
+    // loaded host (round-4 advice #5)
+    import SparkTestSession.countActions
     import spark.implicits._
     val path = s"$sf/embeddings.parquet"
     val emb = spark.read.parquet(path)
@@ -277,15 +262,7 @@ class PlanSpec extends AnyFunSuite {
     // (host-state-independent, unlike wall clock). Budget 20 vs 14-16
     // observed: headroom for scheduler-internal jobs, not for a
     // per-wave-broadcast regression (which would add ~30).
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val nJobs = try {
+    val nJobs = SparkTestSession.recordJobs {
       import spark.implicits._
       val corpus = graft.fixtures.FixtureCorpus
         .generate(graft.Queries.fixtureParams).toDS.toDF
@@ -293,10 +270,7 @@ class PlanSpec extends AnyFunSuite {
       val seen = new graft.engine.CrawlEngine(spark, corpus, seed,
         graft.Queries.fixtureRules, useSketch = true).run().seen
       assert(seen.count() == 20)
-      org.apache.spark.GraftListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext, 30000L)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(l)
+    }._2.size
     assert(nJobs <= 20, s"fixture crawl ran $nJobs jobs (budget 20)")
   }
 
@@ -312,22 +286,7 @@ class PlanSpec extends AnyFunSuite {
     // Resolving a parquet table costs a listing/footer job by itself, so the
     // gate is DIFFERENTIAL: building+planning q44 must run exactly as many
     // jobs as resolving its one input table — zero extra for pivot values.
-    def jobsDuring(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        org.apache.spark.GraftListenerBridge
-          .waitUntilListenerBusEmpty(spark.sparkContext, 30000L)
-      } finally spark.sparkContext.removeSparkListener(l)
-      jobs.get
-    }
+    def jobsDuring(body: => Unit): Int = SparkTestSession.recordJobs(body)._2.size
     val baseline = jobsDuring {
       spark.read.parquet(s"$sf/events.parquet").queryExecution.executedPlan
     }

@@ -4,7 +4,6 @@ import graft.SparkTestSession
 import graft.fixtures.FixtureCorpus
 import graft.model._
 import graft.oracle.RefCrawler
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,22 +24,6 @@ class ActionBudgetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def countActions(body: => Unit): Int = {
-    val execIds = scala.collection.concurrent.TrieMap.empty[String, Unit]
-    val rddJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val id = j.properties.getProperty("spark.sql.execution.id")
-        if (id == null) rddJobs.incrementAndGet() else execIds.put(id, ())
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.GraftListenerBridge
-      .waitUntilListenerBusEmpty(spark.sparkContext, 30000L) }
-    finally spark.sparkContext.removeSparkListener(l)
-    execIds.size + rddJobs.get
-  }
-
   test("per-batch action budget: <= 6 actions/batch on the parity config") {
     // no redirects / no temporal failures: one batch per wave, so the
     // budget divides cleanly. Budget per batch (sketch on): the batch
@@ -55,7 +38,7 @@ class ActionBudgetSpec extends AnyFunSuite {
     val oracle = RefCrawler.run(corpus, seed, rules)
     val waves = oracle.waveTotals.size
     var tables: CrawlTables = null
-    val actions = countActions {
+    val actions = SparkTestSession.countActions {
       tables = new CrawlEngine(spark, corpus.toDF, seed, rules,
         useSketch = true).run()
     }

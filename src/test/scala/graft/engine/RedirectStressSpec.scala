@@ -3,7 +3,6 @@ package graft.engine
 import graft.SparkTestSession
 import graft.model._
 import graft.oracle.RefCrawler
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -134,18 +133,6 @@ class RedirectStressSpec extends AnyFunSuite {
     assertParity(corpus, "temporal-chain")
   }
 
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.GraftListenerBridge
-      .waitUntilListenerBusEmpty(spark.sparkContext, 30000L) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   /** Seed -> n 1-hop redirect chains, each to a unique target page. */
   private def redirectHeavy(n: Int): Seq[CorpusDoc] = {
     val rs = (0 until n).map(i => s"http://h${i % 4}.test/r$i.html")
@@ -171,10 +158,10 @@ class RedirectStressSpec extends AnyFunSuite {
     val rules = Seq(RecipeRule(spider = Some(".*"), depth = 3))
     val oracle = RefCrawler.run(corpus, seed, rules)
     var engine: CrawlTables = null
-    val jobs = countJobs {
+    val jobs = SparkTestSession.recordJobs {
       engine = new CrawlEngine(spark, corpus.toDF, seed, rules).run()
       engine.seen.count()
-    }
+    }._2.size
     val eSeen = engine.seen.orderBy("seq")
       .select("url", "wave").as[(String, Int)].collect.toSeq
     assert(eSeen == oracle.seen.map(s => (s.url, s.wave)), s"$clue: seen order")

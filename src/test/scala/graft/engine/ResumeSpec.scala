@@ -60,6 +60,96 @@ class ResumeSpec extends AnyFunSuite {
     assert(fetchedOf(resumed) == fetchedOf(full), "fetched")
   }
 
+  // ---- the resumed crawl equals the uninterrupted one on all nine tables:
+  // across a rule entry, from a finished crawl, and from a snapshot whose
+  // meta lacks `processed_rows`
+  private val twoRules = Seq(
+    RecipeRule(spider = Some(".*"), fetch = Some("(?i).*\\.(txt|bz2)$"), depth = 1),
+    RecipeRule(spider = Some(".*"), fetch = Some("(?i).*\\.(txt|bz2)$"), depth = 1))
+  private lazy val twoRuleDir = tmpDir("two-rule-full")
+  private lazy val twoRuleFull = tablesOf(new CrawlEngine(spark, corpus.toDF,
+    seed, twoRules, checkpoint = Some(new TableIO(twoRuleDir, spark))).run())
+
+  /** Every table as its sorted row strings (a multiset; `seq` and `ord`
+    * columns carry the order). `metrics` is compared per wave: its
+    * per-partition split follows the physical partitioning of the wave's
+    * input, which a resumed crawl reads back from parquet. */
+  private def tablesOf(t: CrawlTables): Map[String, Seq[String]] = {
+    import org.apache.spark.sql.functions.{col, sum}
+    Map(
+      "seen" -> t.seen, "processed" -> t.processed, "dump" -> t.dump,
+      "edges" -> t.edges, "aliases" -> t.aliases, "fetch_log" -> t.fetchLog,
+      "robots_blocked" -> t.robotsBlocked,
+      "metrics" -> t.metrics.groupBy(col("wave"), col("ruleIdx"),
+        (col("partitionId") === -1).as("total"))
+        .agg(sum("frontierRows"), sum("fetchedRows"), sum("errorRows"),
+          sum("discoveredRows"), sum("bytesFetched")),
+      "fetched" -> t.fetched)
+      .map { case (n, df) => n -> df.collect().map(_.toString).toSeq.sorted }
+  }
+
+  private def assertSameTables(got: Map[String, Seq[String]]): Unit = {
+    val differ = twoRuleFull.keys.filter(n => got(n) != twoRuleFull(n))
+    assert(differ.isEmpty, s"tables differ from the uninterrupted crawl: $differ")
+  }
+
+  /** Kill a two-rule crawl after `waves` waves; returns its snapshot dir. */
+  private def killedAfter(waves: Int, tag: String): String = {
+    val dir = tmpDir(tag)
+    new CrawlEngine(spark, corpus.toDF, seed, twoRules,
+      checkpoint = Some(new TableIO(dir, spark)),
+      stopAfterWaves = Some(waves)).run()
+    dir
+  }
+
+  private def resumeIn(dir: String): (CrawlEngine, Map[String, Seq[String]]) = {
+    val engine = new CrawlEngine(spark, corpus.toDF, seed, twoRules,
+      checkpoint = Some(new TableIO(dir, spark)))
+    (engine, tablesOf(engine.resume()))
+  }
+
+  test("resume after the last wave of rule 0 crosses the rule entry exactly") {
+    twoRuleFull
+    val io = new TableIO(twoRuleDir, spark)
+    val m = io.table(io.latest.get, "metrics")
+    val lastOfRule0 = m.filter(m("ruleIdx") === 0)
+      .agg(org.apache.spark.sql.functions.max(m("wave")))
+      .as[Int].head()
+    assert(m.filter(m("ruleIdx") === 1).count() > 0,
+      "the crawl must run waves under both rules")
+    val dir = killedAfter(lastOfRule0, "rule-entry")
+    val snap = new TableIO(dir, spark).latest.get
+    assert(snap.meta("rule_idx") == "0" && snap.tables("outer_queue").rows > 0,
+      "killed after rule 0 with its outer queue pending")
+    assertSameTables(resumeIn(dir)._2)
+  }
+
+  test("resume from a finished crawl's snapshot runs no wave") {
+    twoRuleFull
+    val io = new TableIO(twoRuleDir, spark)
+    val last = io.latestId
+    val (engine, got) = resumeIn(twoRuleDir)
+    assert(engine.commitStats._2 == 0, "no wave may run, so nothing is committed")
+    assert(io.latestId == last)
+    assertSameTables(got)
+  }
+
+  test("resume from a snapshot without processed_rows takes the codec default") {
+    import graft.tableio.TableWrite
+    val dir = killedAfter(3, "no-processed-rows")
+    val io = new TableIO(dir, spark)
+    val snap = io.latest.get
+    // re-commit the same tables (no new rows) under meta without the key
+    io.commitWrites(snap.meta - "processed_rows", snap.tables.map { case (n, t) =>
+      n -> TableWrite(io.table(snap, n).limit(0), t.files, t.rows) })
+    val meta = io.latest.get.meta
+    assert(!meta.contains("processed_rows"))
+    val c = CrawlCursor.fromMeta(meta)
+    assert(c == CrawlCursor.fromMeta(snap.meta)
+      .copy(processedRows = Long.MaxValue, sketch = c.sketch))
+    assertSameTables(resumeIn(dir)._2)
+  }
+
   test("S2 fetch-state: byte-range resume verdicts (ok / checksum / no_resume)") {
     import graft.oracle.RefCrawler
     import org.apache.spark.sql.functions.col
