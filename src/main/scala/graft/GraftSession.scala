@@ -11,9 +11,12 @@ import org.apache.spark.sql.SparkSession
  *    level) is written once. Callers add only what is theirs (`Main`'s
  *    optimizer extensions).
  *  - `withConf` is the one way to change a runtime conf for a stretch of
- *    work: execution profiles (the crawl's small-wave profile, q14's small
- *    corpus, the staged streaming runs, q56's runtime filter) scope their
- *    settings to the actions they shape and leave the session as found.
+ *    work: execution profiles (`SmallData`, the staged streaming runs,
+ *    q56's runtime filter) scope their settings to the actions they shape
+ *    and leave the session as found.
+ *  - `SmallData` is the one small-data profile: the crawl's waves of at
+ *    most `SmallRankRows` rows and every registered query whose input
+ *    tables hold at most `SparkEntry.SmallInputRows` rows run under it.
  */
 object GraftSession {
 
@@ -25,6 +28,32 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.log.level", "WARN")
+
+  /** The small-data profile. A small input is pure driver and stage
+    * latency, so the plan is shaped for dispatch cost, not for volume:
+    *  - AQE off: its per-stage re-optimization jobs cost more than they
+    *    save on a few thousand rows (~30% of a fixture crawl's wall time);
+    *  - 4 shuffle partitions;
+    *  - no broadcast joins: each broadcast is one extra async job per join
+    *    per action (exchange reuse is within one query only), so the joins
+    *    run as inline hash joins and the work rides the action's own job
+    *    (~30 of the fixture crawl's 45 jobs were broadcast builds);
+    *  - interpreted execution: 60-75% of a small crawl wave's floor was
+    *    driver time spent in whole-stage codegen and expression compiles
+    *    that a small input can never amortize (wave plans embed per-wave
+    *    literals, so the codegen cache misses every wave; interpreted,
+    *    the fixture crawl went from 7.3 s to ~4 s steady). A 13-query
+    *    mix over 800 rows compiled 212-237 classes per warm pass, more
+    *    than the 100-entry codegen cache holds, so nothing was reused;
+    *    interpreted, a warm pass compiles none.
+    * Big inputs keep the session's settings: AQE's coalescing and skew
+    * handling and generated code are the right plan at scale. */
+  val SmallData: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   /** Runs `body` with `conf` set on the session, then restores every key
     * to what it was at entry on every exit path: keys that were set get

@@ -29,6 +29,11 @@ object Queries {
 
   private def p(dir: String, t: String) = s"$dir/$t.parquet"
 
+  /** Table `t` of the data dir, read without a schema-inference job once
+    * its schema is known (`ParquetStats.read`). */
+  private def table(s: SparkSession, dir: String, t: String): DataFrame =
+    graft.tableio.ParquetStats.read(s, p(dir, t))
+
   /** Idempotently register the graft optimizer rules on a live session
     * (round-5 verdict #2: GraftExtensions was registered only inside
     * PlanSpec, so the driver-surface q64/q104/q114 plans ran WITHOUT the
@@ -222,7 +227,7 @@ object Queries {
   // ------------------------------------------------- relational (oracled)
 
   def q1Agg(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "lineitem"))
+    table(s, dir, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         sum("l_quantity").as("sum_qty"),
@@ -241,11 +246,11 @@ object Queries {
       |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   def q2JoinRevenue(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(p(dir, "lineitem"))
-    val o = s.read.parquet(p(dir, "orders"))
-    val c = s.read.parquet(p(dir, "customer"))
-    val n = s.read.parquet(p(dir, "nation"))
-    val r = s.read.parquet(p(dir, "region"))
+    val li = table(s, dir, "lineitem")
+    val o = table(s, dir, "orders")
+    val c = table(s, dir, "customer")
+    val n = table(s, dir, "nation")
+    val r = table(s, dir, "region")
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -269,7 +274,7 @@ object Queries {
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   def q3TopkCustomers(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "orders"))
+    table(s, dir, "orders")
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n_orders"),
         round(sum("o_totalprice"), 2).as("total_spent"))
@@ -284,7 +289,7 @@ object Queries {
 
   def q4FirstEvent(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("user_id", "event_id", "event_type")
@@ -298,8 +303,8 @@ object Queries {
       |  FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin
 
   def q5AntiJoin(s: SparkSession, dir: String): DataFrame = {
-    val c = s.read.parquet(p(dir, "customer"))
-    val o = s.read.parquet(p(dir, "orders"))
+    val c = table(s, dir, "customer")
+    val o = table(s, dir, "orders")
     c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
@@ -311,8 +316,8 @@ object Queries {
       |ORDER BY c_custkey""".stripMargin
 
   def q6SemiJoin(s: SparkSession, dir: String): DataFrame = {
-    val c = s.read.parquet(p(dir, "customer"))
-    val o = s.read.parquet(p(dir, "orders"))
+    val c = table(s, dir, "customer")
+    val o = table(s, dir, "orders")
     c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_mktsegment")
       .orderBy("c_custkey")
@@ -326,7 +331,7 @@ object Queries {
   def q7RunningSum(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .filter(col("user_id") < 20)
       .withColumn("running_value", round(sum("value").over(w), 4))
       .select("user_id", "event_id", "running_value")
@@ -340,7 +345,7 @@ object Queries {
       |FROM events WHERE user_id < 20 ORDER BY user_id, event_id""".stripMargin
 
   def q8TimeBucket(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour").getField("start").as("w_start"),
         col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
@@ -354,7 +359,7 @@ object Queries {
   // ------------------------------------------- text pipeline (oracled)
 
   def q9Tokens(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         TextAnalysis.bpeTokenEstimate(col("text")).as("n_bpe_est"))
@@ -367,7 +372,7 @@ object Queries {
       |FROM documents ORDER BY doc_id""".stripMargin
 
   def q10Quality(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.qualityScore(s.read.parquet(p(dir, "documents")))
+    TextAnalysis.qualityScore(table(s, dir, "documents"))
       .select("doc_id", "n_tokens", "mean_word_len", "digit_ratio",
         "space_ratio", "stopword_ratio", "quality_score")
       .orderBy("doc_id")
@@ -396,7 +401,7 @@ object Queries {
       |  FROM documents) ORDER BY doc_id""".stripMargin
 
   def q11LangId(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         TextAnalysis.langId(col("text")).as("lang_pred"))
       .orderBy("doc_id")
@@ -424,7 +429,7 @@ object Queries {
   val q11Sql: String = langPredSql + " ORDER BY doc_id"
 
   def q12ExactDedup(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(s.read.parquet(p(dir, "documents")))
+    Dedup.exact(table(s, dir, "documents"))
       .orderBy("keep_id")
 
   val q12Sql: String =
@@ -433,7 +438,7 @@ object Queries {
       |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin
 
   def q13SourceStats(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
         round(avg(length(col("text"))), 4).as("avg_len"))
@@ -448,7 +453,7 @@ object Queries {
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
 
   def q16EmbedTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(p(dir, "embeddings"))
+    val emb = table(s, dir, "embeddings")
     import s.implicits._
     val q = emb.orderBy("vec_id").select("embedding").as[Seq[Float]].head()
     Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 20)
@@ -480,7 +485,7 @@ object Queries {
     * the verify stage dominated the bench at sf0.1). */
   def q14MinhashPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashLshPairs(
-      withPlantedDups(s.read.parquet(p(dir, "documents"))),
+      withPlantedDups(table(s, dir, "documents")),
       "doc_id", "text", shingleN = 5, k = 120, bands = 24, threshold = 0.6)
       .orderBy("id_a", "id_b")
 
@@ -516,7 +521,7 @@ object Queries {
     * the round-1 4x16 banding only guaranteed distance 3. */
   def q15SimhashPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairs(
-      withPlantedDups(s.read.parquet(p(dir, "documents"))),
+      withPlantedDups(table(s, dir, "documents")),
       "doc_id", "text", maxDistance = 6, blocks = 8)
       .orderBy("id_a", "id_b")
 
@@ -524,7 +529,7 @@ object Queries {
     * nprobe = min(cells, ceil(√cells)+4) — computed inside ivfTopK and
     * REPLAYED by the oracle's expression LIMITs below. */
   def q17IvfAnn(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(p(dir, "embeddings"))
+    val emb = table(s, dir, "embeddings")
     import s.implicits._
     val q = emb.orderBy("vec_id").select("embedding").as[Seq[Float]].head()
     // n from parquet-footer metadata — no count() scan (round-3 verdict #4)
@@ -580,7 +585,7 @@ object Queries {
   }
 
   def q18EmbedNearDups(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(p(dir, "embeddings"))
+    val emb = table(s, dir, "embeddings")
     // plant exact-duplicate vectors so the detector has positives
     val planted = emb.filter(col("vec_id") % 100 === 0)
       .withColumn("vec_id", col("vec_id") + 10000000L)
@@ -613,7 +618,7 @@ object Queries {
 
   def q19NgramJaccard(s: SparkSession, dir: String): DataFrame = {
     val docs = withPlantedDups(
-      s.read.parquet(p(dir, "documents")).filter(col("doc_id") % 20 === 0))
+      table(s, dir, "documents").filter(col("doc_id") % 20 === 0))
     val sh = docs.select(col("doc_id").as("id"),
       Dedup.wordShingles(col("text"), 3).as("sh"),
       TextAnalysis.tokenCount(col("text")).as("n"))
@@ -814,7 +819,7 @@ object Queries {
 
   def q23StreamWindow(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = s.read.parquet(p(dir, "events")).schema
+    val schema = table(s, dir, "events").schema
     val streamDir = stagedStreamDir(p(dir, "events"))
     // watermarks need TIMESTAMP (LTZ); parquet carries NTZ — session tz is
     // UTC so the instants are identical; cast back for oracle-schema parity
@@ -846,7 +851,7 @@ object Queries {
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Streaming
     import s.implicits._
-    val schema = s.read.parquet(p(dir, "events")).schema
+    val schema = table(s, dir, "events").schema
     val streamDir = stagedStreamDir(p(dir, "events"))
     // derive a URL-event stream with heavy key duplication (many events
     // share (user, event_type)): the dedup has real work at any SF
@@ -891,10 +896,10 @@ object Queries {
     * mode; final table == the batch join+agg, which is the oracle. */
   def q31StreamEnrich(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = s.read.parquet(p(dir, "events")).schema
+    val schema = table(s, dir, "events").schema
     val streamDir = stagedStreamDir(p(dir, "events"))
     val stream = s.readStream.schema(schema).parquet(streamDir)
-    val dim = s.read.parquet(p(dir, "customer"))
+    val dim = table(s, dir, "customer")
       .select("c_custkey", "c_mktsegment")
     val agg = graft.streaming.Streaming.enrichedSegmentStats(stream, dim)
     val name = "q31_stream_enrich_result"
@@ -938,7 +943,7 @@ object Queries {
   @volatile var q35LastDropped: Long = -1L
   def q35StreamLate(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
-    val events = s.read.parquet(p(dir, "events"))
+    val events = table(s, dir, "events")
     val onTime = events.select(col("ts"), col("event_type"), col("value"))
     val late = events.filter(pmod(col("event_id"), lit(7)) === 0)
       .select((col("ts") - expr("INTERVAL 6 HOURS")).as("ts"),
@@ -1001,7 +1006,7 @@ object Queries {
     * overlap) — the oracle's gaps-and-islands formulation uses >= to
     * match exactly. */
   def q33Sessions(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .withColumn("ts", col("ts").cast("timestamp"))
       .filter(col("user_id") < 40)
       .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
@@ -1032,7 +1037,7 @@ object Queries {
     * reporting baseline; a 100-TB profile over few groups switches to
     * approx_percentile (t-digest), which no exact oracle can pin. */
   def q34Quantiles(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         round(expr("percentile(n_chars, 0.5)"), 4).as("p50"),
@@ -1058,7 +1063,7 @@ object Queries {
     * row-hash. Same shape/column names as q34 for drop-in use. */
   def q34QuantilesApprox(s: SparkSession, dir: String,
                          accuracy: Int = 10000): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         expr(s"approx_percentile(n_chars, 0.5, $accuracy)").cast("double").as("p50"),
@@ -1074,7 +1079,7 @@ object Queries {
     * driver surface stay the small-scale truth. */
   def distinctUsersApprox(s: SparkSession, dir: String,
                           rsd: Double = 0.05): DataFrame =
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .groupBy("event_type")
       .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"))
       .orderBy("event_type")
@@ -1088,7 +1093,7 @@ object Queries {
     // interpreted (HOFs) at ~1.3 s/doc — 130 s for this query at sf0.1;
     // the kernel emits bit-identical fingerprints in ~1 s total
     // (PipelineSpec pins kernel == expression on the corpus).
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .filter(col("doc_id") % 50 === 0)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
@@ -1179,7 +1184,7 @@ object Queries {
     * the query's bucket + 8 single-bit multiprobes, exact cosine within
     * the probed candidates. */
   def q28LshAnn(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(p(dir, "embeddings"))
+    val emb = table(s, dir, "embeddings")
     import s.implicits._
     val q = emb.orderBy("vec_id").select("embedding").as[Seq[Float]].head()
     Similarity.lshTopK(emb, "vec_id", "embedding", q, 20,
@@ -1233,7 +1238,7 @@ object Queries {
     * shape: grams never leave their doc's key space), and the combined
     * flag a filtering pipeline would drop on. */
   def q29Repetition(s: SparkSession, dir: String): DataFrame = {
-    val base = s.read.parquet(p(dir, "documents"))
+    val base = table(s, dir, "documents")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
     val uni = base.select(col("doc_id"),
       size(col("ts")).as("n_tokens"),
@@ -1292,7 +1297,7 @@ object Queries {
     * shape: the benchmark gram set is small by construction → broadcast
     * join against the corpus gram stream; no shuffle of the corpus side. */
   def q30Contamination(s: SparkSession, dir: String): DataFrame = {
-    val grams = s.read.parquet(p(dir, "documents"))
+    val grams = table(s, dir, "documents")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
       .select(col("doc_id"), explode(TextAnalysis.wordNgrams(col("ts"), 5)).as("g"))
     val bench = grams.filter(col("doc_id") % 7 === 0).select("g").distinct()
@@ -1334,7 +1339,7 @@ object Queries {
   def q36TrainSplit(s: SparkSession, dir: String): DataFrame = {
     val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 8),
       16, 10).cast("long") % 100
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(col("doc_id"), col("source"), bucket.as("bucket"))
       .withColumn("split",
         when(col("bucket") < 80, "train")
@@ -1360,7 +1365,7 @@ object Queries {
     * component's minimum doc id, keep = the survivor rule. */
   def q37DupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.minhashLshPairs(
-      withPlantedDups(s.read.parquet(p(dir, "documents"))),
+      withPlantedDups(table(s, dir, "documents")),
       "doc_id", "text", shingleN = 5, k = 120, bands = 24, threshold = 0.6)
     Dedup.connectedComponents(pairs, "id_a", "id_b")
       .withColumn("keep", col("id") === col("cluster_id"))
@@ -1389,7 +1394,7 @@ object Queries {
   def q38SamplePerGroup(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("lang"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(col("lang"), col("doc_id"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
@@ -1412,7 +1417,7 @@ object Queries {
     * count rides a 1-row broadcast, the top-k window sees only slim
     * (source, term, counts) rows. */
   def q39Tfidf(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(p(dir, "documents"))
+    val docs = table(s, dir, "documents")
     val toks = docs.select(col("source"),
       explode(TextAnalysis.tokens(col("text"))).as("term"))
     val tf = toks.groupBy("source", "term").agg(count(lit(1)).as("tf"))
@@ -1449,7 +1454,7 @@ object Queries {
     * (one (doc, gram) shuffle), gram-keyed count, TakeOrderedAndProject
     * top-k — the corpus text never moves twice. */
   def q40Boilerplate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
       .select(col("doc_id"), explode(TextAnalysis.wordNgrams(col("ts"), 8)).as("g"))
       .distinct()
@@ -1475,7 +1480,7 @@ object Queries {
     * outputs are exact integers (no float hash hazards). */
   def q41JsonProps(s: SparkSession, dir: String): DataFrame = {
     val k = get_json_object(col("props"), "$.k").cast("long")
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .select(col("event_type"), k.as("k"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct("k").as("n_k"),
@@ -1500,7 +1505,7 @@ object Queries {
     * by event_id, so the match is the max-event_id click at the max
     * qualifying ts — the oracle states the same rule in ANSI subqueries. */
   def q42AsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id"), lit(0).as("tag"),
         lit(null).cast("double").as("value"))
@@ -1544,10 +1549,10 @@ object Queries {
     * engine-neutral grouping bitmask; subtotal rows sort NULLS FIRST in
     * both engines by explicit direction. */
   def q43Rollup(s: SparkSession, dir: String): DataFrame = {
-    val o = s.read.parquet(p(dir, "orders"))
-    val c = s.read.parquet(p(dir, "customer"))
-    val n = s.read.parquet(p(dir, "nation"))
-    val r = s.read.parquet(p(dir, "region"))
+    val o = table(s, dir, "orders")
+    val c = table(s, dir, "customer")
+    val n = table(s, dir, "nation")
+    val r = table(s, dir, "region")
     o.join(c, col("o_custkey") === col("c_custkey"))
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
@@ -1576,7 +1581,7 @@ object Queries {
     * output matches the conditional-aggregation twin exactly. */
   def q44Pivot(s: SparkSession, dir: String): DataFrame = {
     val types = Seq("click", "error", "purchase", "signup", "view")
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .groupBy("user_id")
       .pivot("event_type", types)
       .agg(count(lit(1)))
@@ -1616,7 +1621,7 @@ object Queries {
         .otherwise(lit("")))
     val scrubbed = regexp_replace(
       regexp_replace(col("body"), emailRe, "<EMAIL>"), ipRe, "<IP>")
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .withColumn("body", body)
       .select(col("source"),
         size(regexp_extract_all(col("body"), lit(emailRe), lit(0)))
@@ -1670,7 +1675,7 @@ object Queries {
     * window side broadcasts; at a 100-TB interval table the same plan
     * degrades gracefully to a shuffle equi-join on bin. */
   def q46RangeJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     val windows = ev
       .agg(date_trunc("hour", min(col("ts"))).as("lo"), max(col("ts")).as("hi"))
       .select(explode(sequence(col("lo"), col("hi"),
@@ -1708,7 +1713,7 @@ object Queries {
     * the tie rule at equal ts is pinned by event_id on both sides. */
   def q47EventGaps(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .withColumn("gap", col("us") - lag("us", 1).over(w))
@@ -1745,7 +1750,7 @@ object Queries {
     import graft.streaming.Streaming
     import s.implicits._
     val cap = 25
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     def shape(df: DataFrame): DataFrame = df.select(
       concat(lit("host"), pmod(col("user_id"), lit(50)), lit(".test"))
         .as("host"),
@@ -1815,7 +1820,7 @@ object Queries {
       val base = tempDirCleaned("graft-buckets-").toString
       Seq(("orders", "o_custkey"), ("customer", "c_custkey")).foreach {
         case (t, key) =>
-          s.read.parquet(p(dir, t))
+          table(s, dir, t)
             .repartition(8, col(key))
             .write.option("path", s"$base/graft_b_${t}_${bucketTag(dir)}")
             .bucketBy(8, key).sortBy(key)
@@ -1876,7 +1881,7 @@ object Queries {
       val out = tempDirCleaned("graft-shards-").toString
       val shard = (conv(substring(md5(col("doc_id").cast("string")), 1, 8),
         16, 10).cast("long") % 16).cast("int")
-      s.read.parquet(p(dir, "documents"))
+      table(s, dir, "documents")
         .withColumn("shard", shard)
         .repartition(col("shard"))
         .write.mode("overwrite")
@@ -1916,7 +1921,7 @@ object Queries {
   private[graft] def timeLayoutPath(s: SparkSession, dir: String): String =
     timeLayoutBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-timelayout-").toString
-      s.read.parquet(p(dir, "events"))
+      table(s, dir, "events")
         .repartitionByRange(8, col("ts"))
         .sortWithinPartitions("ts")
         .write.mode("overwrite").parquet(out)
@@ -1953,7 +1958,7 @@ object Queries {
   def q52StreamJoin(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Streaming
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     def stageSide(t: String, pre: String): String = {
       val d = tempDirCleaned(s"graft-stream-$pre-")
       ev.filter(col("event_type") === t)
@@ -2005,8 +2010,8 @@ object Queries {
     * plan-only — the result is row-for-row the plain join, so the oracle
     * is the unsalted join in ANSI SQL; integer-exact aggregates. */
   def q53SkewJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
-    val cust = s.read.parquet(p(dir, "customer"))
+    val ev = table(s, dir, "events")
+    val cust = table(s, dir, "customer")
     SkewJoin.saltedJoin(ev, cust, "user_id", "c_custkey",
         col("event_id"), hotK = 5, salts = 4, strategy = Some("shuffle_hash"))
       .groupBy("c_mktsegment")
@@ -2046,7 +2051,7 @@ object Queries {
     * gates the deterministic half). The exact count rides along for the
     * error column a real pipeline report would show. */
   def q54CmsTopk(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     val d = 4
     val w = 4096
     def bucket(i: Int, key: org.apache.spark.sql.Column) =
@@ -2118,7 +2123,7 @@ object Queries {
         shiftleft(bit(col("day_idx"), i), 2 * i + 1)
           .bitwiseOR(shiftleft(bit(col("ubucket"), i), 2 * i)))
         .reduce(_ bitwiseOR _)
-      s.read.parquet(p(dir, "events"))
+      table(s, dir, "events")
         // epoch-day index relative to 2024-01-01 (epoch day 19723); the
         // testdata spans days 0..29, so 6 bits are lossless. ts is
         // TIMESTAMP_NTZ; session tz is UTC so the cast is value-preserving
@@ -2166,8 +2171,8 @@ object Queries {
     * join and the oracle is the unhinted ANSI join. PlanSpec gates the
     * actual might_contain injection. */
   private[graft] def runtimeFilterPlan(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
-    val cust = s.read.parquet(p(dir, "customer"))
+    val ev = table(s, dir, "events")
+    val cust = table(s, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
     ev.join(cust.hint("merge"), col("user_id") === col("c_custkey"))
       .groupBy("c_nationkey")
@@ -2260,7 +2265,7 @@ object Queries {
   def q58StreamDedup(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Streaming
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
       // watermark needs TIMESTAMP (with tz); session tz is UTC, so the
       // cast from the testdata's NTZ is value-preserving (same as q52)
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
@@ -2308,7 +2313,7 @@ object Queries {
     * is the same pattern) — there is no shuffle-free way to build an
     * ordered per-key sequence. */
   def q57EventPaths(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     ev.groupBy("user_id")
       .agg(
         array_join(transform(
@@ -2335,7 +2340,7 @@ object Queries {
   private val mergeUpsertBase =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def mergeUpdates(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     ev.filter(col("event_id") < 1000)
       .withColumn("event_type", lit("corrected"))
       .withColumn("value", lit(0.0))
@@ -2350,7 +2355,7 @@ object Queries {
       val out = tempDirCleaned("graft-merge-").toString
       val tio = new graft.tableio.TableIO(out, s)
       val snap0 = tio.commit(Map("src" -> "events"), Map("events" ->
-        s.read.parquet(p(dir, "events"))
+        table(s, dir, "events")
           .repartitionByRange(8, col("event_id"))
           .sortWithinPartitions("event_id")))
       tio.mergeTable(snap0, "events", mergeUpdates(s, dir), "event_id")
@@ -2404,7 +2409,7 @@ object Queries {
     evolveBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-evolve-").toString
       val tio = new graft.tableio.TableIO(out, s)
-      val docs = s.read.parquet(p(dir, "documents"))
+      val docs = table(s, dir, "documents")
       val snap0 = tio.commit(Map("stage" -> "v0"),
         Map("docs" -> docs.filter(col("doc_id") < 400)))
       val delta = docs.filter(col("doc_id") >= 400)
@@ -2475,7 +2480,7 @@ object Queries {
     * re-offered → no-op) and per-batch snapshot lineage. */
   def q61StreamSink(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
     val streamDir = tempDirCleaned("graft-stream-sink-in-")
     val t0 = ((System.currentTimeMillis() / 1000) - 300) * 1000
@@ -2524,7 +2529,7 @@ object Queries {
     retentionBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-retention-").toString
       val tio = new graft.tableio.TableIO(out, s)
-      val docs = s.read.parquet(p(dir, "documents"))
+      val docs = table(s, dir, "documents")
       val snap0 = tio.commit(Map("src" -> "documents"), Map("docs" ->
         docs.repartitionByRange(8, col("doc_id"))
           .sortWithinPartitions("doc_id")))
@@ -2572,7 +2577,7 @@ object Queries {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
       .rangeBetween(-3600000000L, 0L)
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .withColumn("ts_us", expr("unix_micros(cast(ts as timestamp))"))
       .select(col("event_id"), col("user_id"),
         count(lit(1)).over(w).as("n_trailing_1h"),
@@ -2604,7 +2609,7 @@ object Queries {
     * excludes those by construction and the oracle shares the block). */
   def q64FuzzyMatch(s: SparkSession, dir: String): DataFrame = {
     ensureGraftRules(s)
-    val k = s.read.parquet(p(dir, "documents"))
+    val k = table(s, dir, "documents")
       .select(col("doc_id"), lower(substring(col("text"), 1, 24)).as("key"))
       .withColumn("blk", substring(col("key"), 1, 4))
     val a = k.select(col("blk"), col("doc_id").as("a_id"), col("key").as("a_key"))
@@ -2739,7 +2744,7 @@ object Queries {
   }
 
   def q66InvertedIndex(s: SparkSession, dir: String): DataFrame =
-    invertedIndex(s.read.parquet(p(dir, "documents")), headK = 20)
+    invertedIndex(table(s, dir, "documents"), headK = 20)
 
   val q66Sql: String =
     """WITH toks AS (SELECT DISTINCT doc_id,
@@ -2769,7 +2774,7 @@ object Queries {
     // typed gram source, materialized once (round-6 — the q79 pattern):
     // the HOF bigram expression was evaluated for both the model agg and
     // the join-back
-    val grams = s.read.parquet(p(dir, "documents"))
+    val grams = table(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions(it => it.flatMap { case (id, t) =>
@@ -2816,7 +2821,7 @@ object Queries {
   def q68FeatureBins(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type")
       .orderBy(col("value"), col("event_id"))
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .select(col("event_type"), col("event_id"), col("value"))
       .withColumn("decile", ntile(10).over(w))
       .groupBy("event_type", "decile")
@@ -2892,7 +2897,7 @@ object Queries {
     * the only sessionization that runs forever on a 100-TB firehose. */
   def q70StreamSessions(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     val streamDir = tempDirCleaned("graft-stream-sess-in-")
     val t0 = ((System.currentTimeMillis() / 1000) - 300) * 1000
@@ -2955,7 +2960,7 @@ object Queries {
     morBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-mor-").toString
       val tio = new graft.tableio.TableIO(out, s)
-      val docs = s.read.parquet(p(dir, "documents"))
+      val docs = table(s, dir, "documents")
       val snap0 = tio.commit(Map("src" -> "documents"), Map("docs" ->
         docs.repartitionByRange(8, col("doc_id"))
           .sortWithinPartitions("doc_id")))
@@ -3021,15 +3026,15 @@ object Queries {
     * recomputes the identical fingerprints, so a hash match here means
     * the two engines agree on every row of all three tables. */
   def q72TableChecksum(s: SparkSession, dir: String): DataFrame = {
-    val docs = tableFingerprint(s.read.parquet(p(dir, "documents")),
+    val docs = tableFingerprint(table(s, dir, "documents"),
       "documents",
       concat_ws("|", col("doc_id"), col("lang"), col("source"),
         col("n_chars"), md5(col("text"))))
-    val ev = tableFingerprint(s.read.parquet(p(dir, "events")), "events",
+    val ev = tableFingerprint(table(s, dir, "events"), "events",
       concat_ws("|", col("event_id"),
         expr("unix_micros(cast(ts as timestamp))"), col("user_id"),
         col("event_type"), col("props")))
-    val li = tableFingerprint(s.read.parquet(p(dir, "lineitem")),
+    val li = tableFingerprint(table(s, dir, "lineitem"),
       "lineitem",
       concat_ws("|", col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_linenumber"), col("l_returnflag"), col("l_linestatus"),
@@ -3098,7 +3103,7 @@ object Queries {
 
   def q73TermCooccur(s: SparkSession, dir: String): DataFrame = {
     val nd = graft.tableio.ParquetStats.rowCount(s, p(dir, "documents"))
-    termCooccur(s, s.read.parquet(p(dir, "documents")), nd,
+    termCooccur(s, table(s, dir, "documents"), nd,
       minDf = 2L, ceilNum = 9L, ceilDen = 10L, minPair = 5L)
   }
 
@@ -3133,7 +3138,7 @@ object Queries {
     * one broadcast of the 1-row anchor + one hash agg; at 100 TB the
     * decay is a map-side expression, never a shuffle. */
   def q74DecayScores(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
       .select(col("event_type"), col("user_id"),
         expr("unix_micros(cast(ts as timestamp))").as("us"))
     val anchor = ev.agg(max("us").as("a"))
@@ -3197,7 +3202,7 @@ object Queries {
   }
 
   def q75Triangles(s: SparkSession, dir: String): DataFrame =
-    triangles(s.read.parquet(p(dir, "lineitem"))
+    triangles(table(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct())
 
@@ -3318,7 +3323,7 @@ object Queries {
   }
 
   def q76PrefixSsjoin(s: SparkSession, dir: String): DataFrame =
-    prefixSsjoin(s.read.parquet(p(dir, "documents")), theta10 = 6L)
+    prefixSsjoin(table(s, dir, "documents"), theta10 = 6L)
 
   val q76Sql: String =
     """WITH base AS (SELECT doc_id,
@@ -3362,7 +3367,7 @@ object Queries {
     * is one timestamp, never the event history. A MATCH_RECOGNIZE-style
     * NFA is unnecessary for strictly-ordered funnels. */
   def q77Funnel(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(cast(ts as timestamp))").as("us"))
     val v = ev.filter(col("event_type") === "view")
@@ -3444,7 +3449,7 @@ object Queries {
   }
 
   def q78VocabEncode(s: SparkSession, dir: String): DataFrame =
-    vocabEncode(s.read.parquet(p(dir, "documents")), vocabSize = 24,
+    vocabEncode(table(s, dir, "documents"), vocabSize = 24,
       headLen = 16)
 
   val q78Sql: String =
@@ -3479,7 +3484,7 @@ object Queries {
     * one doc-keyed re-agg — (doc, gram) pairs shuffle, text never does;
     * dup_ppm is an integer rational (no float division). */
   def q79DupSpans(s: SparkSession, dir: String): DataFrame =
-    q79DupSpansOn(s.read.parquet(p(dir, "documents")))
+    q79DupSpansOn(table(s, dir, "documents"))
 
   private[graft] def q79DupSpansOn(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
@@ -3536,20 +3541,20 @@ object Queries {
     * broadcast when dimension-sized, shuffle otherwise; nothing ever
     * materializes the orphan rows themselves. */
   def q80FkAudit(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events")).select("event_id", "user_id")
+    val ev = table(s, dir, "events").select("event_id", "user_id")
     val evAudit = ev.unionByName(
       ev.filter(pmod(col("event_id"), lit(500)) === 0)
         .select(col("event_id"), (col("user_id") + 1000000000L).as("user_id")))
-    val li = s.read.parquet(p(dir, "lineitem"))
+    val li = table(s, dir, "lineitem")
       .select("l_orderkey", "l_linenumber")
     val liAudit = li.unionByName(
       li.filter(pmod(col("l_orderkey"), lit(997)) === 0 &&
           col("l_linenumber") === 1)
         .select((col("l_orderkey") + 1000000000L).as("l_orderkey"),
           col("l_linenumber")))
-    val cust = s.read.parquet(p(dir, "customer")).select("c_custkey")
-    val ord = s.read.parquet(p(dir, "orders")).select("o_orderkey", "o_custkey")
-    val part = s.read.parquet(p(dir, "part")).select("p_partkey")
+    val cust = table(s, dir, "customer").select("c_custkey")
+    val ord = table(s, dir, "orders").select("o_orderkey", "o_custkey")
+    val part = table(s, dir, "part").select("p_partkey")
     def audit(name: String, child: DataFrame, key: String,
               parent: DataFrame, pkey: String): DataFrame =
       child.join(parent.withColumn("__hit", lit(1)),
@@ -3561,7 +3566,7 @@ object Queries {
       .unionByName(audit("lineitem.l_orderkey->orders", liAudit,
         "l_orderkey", ord, "o_orderkey"))
       .unionByName(audit("lineitem.l_partkey->part",
-        s.read.parquet(p(dir, "lineitem")).select("l_partkey"),
+        table(s, dir, "lineitem").select("l_partkey"),
         "l_partkey", part, "p_partkey"))
       .unionByName(audit("orders.o_custkey->customer",
         ord.select("o_custkey"), "o_custkey", cust, "c_custkey"))
@@ -3598,7 +3603,7 @@ object Queries {
   private[graft] def jsonlExportPath(s: SparkSession, dir: String): String =
     jsonlBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-jsonl-").toString + "/data"
-      s.read.parquet(p(dir, "documents"))
+      table(s, dir, "documents")
         .withColumn("shard",
           conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
             .cast("long") % 4)
@@ -3673,7 +3678,7 @@ object Queries {
 
   def q82MixtureAlloc(s: SparkSession, dir: String): DataFrame =
     mixtureAlloc(
-      s.read.parquet(p(dir, "documents"))
+      table(s, dir, "documents")
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("mass")),
       budget = 997L)
@@ -3711,7 +3716,7 @@ object Queries {
       val tio = new graft.tableio.TableIO(out, s)
       tio.commit(Map("src" -> "documents"),
         Map("docs_spans" -> interleavedSpans(
-          s.read.parquet(p(dir, "documents")))))
+          table(s, dir, "documents"))))
       out
     })
 
@@ -3819,7 +3824,7 @@ object Queries {
     * same marker table q11's oracle uses, so the matrix is pinned
     * end-to-end, not just the diagonal. */
   def q84LangConfusion(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(col("lang"), TextAnalysis.langId(col("text")).as("lang_pred"),
         col("n_chars"))
       .groupBy("lang", "lang_pred")
@@ -3846,7 +3851,7 @@ object Queries {
     * quadratic. */
   def q85CommonNeighbors(s: SparkSession, dir: String): DataFrame =
     commonNeighbors(
-      s.read.parquet(p(dir, "lineitem"))
+      table(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct())
 
@@ -3901,7 +3906,7 @@ object Queries {
   }
 
   def q86FrequentTriples(s: SparkSession, dir: String): DataFrame =
-    frequentTriples(s.read.parquet(p(dir, "lineitem"))
+    frequentTriples(table(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct())
 
@@ -3924,7 +3929,7 @@ object Queries {
   def q87EventTransitions(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("us"), col("event_id"))
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("unix_micros(cast(ts as timestamp))").as("us"))
       .withColumn("prev_type", lag("event_type", 1).over(w))
@@ -3953,7 +3958,7 @@ object Queries {
     * back (all on the same user partitioning), and a cells-sized final
     * agg; per-user state is one bucket id. */
   def q88CohortRetention(s: SparkSession, dir: String): DataFrame = {
-    val act = s.read.parquet(p(dir, "events"))
+    val act = table(s, dir, "events")
       .select(col("user_id"),
         expr("unix_micros(cast(ts as timestamp)) div 43200000000").as("wk"))
       .distinct()
@@ -3989,7 +3994,7 @@ object Queries {
   def q89CentroidStats(s: SparkSession, dir: String): DataFrame = {
     def qz(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       floor(c.cast("double") * 1000.0 + 0.5).cast("long")
-    s.read.parquet(p(dir, "embeddings"))
+    table(s, dir, "embeddings")
       .select(col("label"),
         aggregate(transform(col("embedding"), x => qz(x)), lit(0L),
           (acc, v) => acc + v).as("mass"),
@@ -4022,7 +4027,7 @@ object Queries {
     * type at any corpus size. */
   def q90GapHistogram(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .select(col("event_type"), col("user_id"), col("event_id"),
         expr("unix_micros(cast(ts as timestamp))").as("us"))
       .withColumn("gap", col("us") - lag("us", 1).over(w))
@@ -4056,7 +4061,7 @@ object Queries {
     * `bit_count(mask)` recovers distinct-days-active without any
     * distinct aggregation. */
   def q91ActivityBitmask(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
       .select(col("user_id"),
         expr("unix_micros(cast(ts as timestamp)) div 86400000000").as("d"))
     val origin = ev.agg(min("d").as("o"))
@@ -4089,7 +4094,7 @@ object Queries {
     * pattern covers its error bound) while everything else is
     * unchanged. */
   def q92DataProfile(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     def prof(c: String): DataFrame =
       ev.agg(count(col(c)).as("n_nonnull"),
         countDistinct(col(c)).as("n_distinct"))
@@ -4119,7 +4124,7 @@ object Queries {
     * struct, so the oracle replays the identical semantics as a
     * two-step max CTE — same values, pinned. */
   def q93LatestByType(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(cast(ts as timestamp))").as("us"))
       .groupBy("event_type")
@@ -4151,7 +4156,7 @@ object Queries {
     * scan + map-side partials; the group key adds no shuffle width
     * (16 groups). */
   def q94ShardChecksums(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(
         (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
           .cast("long") % 16).as("shard"),
@@ -4194,7 +4199,7 @@ object Queries {
     * click side is pinned to -1 on both engines (integer-exact rows). */
   def q95StreamOuterJoin(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
     val t0 = ((System.currentTimeMillis() / 1000) - 300) * 1000
     def stageSide(t: String, pre: String, sentinelUser: Long): String = {
       val d = tempDirCleaned(s"graft-stream-oj-$pre-")
@@ -4305,7 +4310,7 @@ object Queries {
         s"'code', cast(array_position($dArr, array_min($dArr)) - 1 as bigint), " +
         s"'dist', array_min($dArr))")
     }
-    s.read.parquet(p(dir, "embeddings"))
+    table(s, dir, "embeddings")
       .select(col("vec_id"), expr("transform(embedding, " +
         "x -> cast(floor(cast(x as double) * 1000 + 0.5) as bigint))").as("qx"))
       .select(explode(array(subStructs: _*)).as("sc"))
@@ -4349,7 +4354,7 @@ object Queries {
     * day's dimension churn vs the full history) and a ≤2-row explode
     * per key; no window, no sort until the output ORDER BY. */
   def q97Scd2Dim(s: SparkSession, dir: String): DataFrame = {
-    val dim = s.read.parquet(p(dir, "customer"))
+    val dim = table(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val upd = dim.filter(pmod(col("c_custkey"), lit(7)) === 0)
       .select(col("c_custkey"), lit("MIGRATED").as("new_seg"))
@@ -4390,7 +4395,7 @@ object Queries {
     * fans out, only (doc_id, k) pairs — followed by one source-keyed
     * aggregation. */
   def q98ChunkSplit(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         graft.pipeline.TextAnalysis.tokenCount(col("text")).as("n"))
       .filter(col("n") > 0)
@@ -4431,7 +4436,7 @@ object Queries {
     * documented swap is the q34 approx_percentile twin (rank-error
     * bound), which keeps the same integer test. */
   def q99MadOutliers(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(p(dir, "documents"))
+    val docs = table(s, dir, "documents")
       .select(col("lang"), col("n_chars"))
     val med = docs.groupBy("lang")
       .agg(expr("cast(percentile(n_chars, 0.5) * 2 as bigint)").as("med2"))
@@ -4475,7 +4480,7 @@ object Queries {
     * combined into a tiny key space, and the top-20 is a
     * TakeOrderedAndProject, never a global sort. */
   def q100BpePairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "documents"))
+    table(s, dir, "documents")
       .select(explode(graft.pipeline.TextAnalysis.tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
       .select(explode(expr(
@@ -4509,7 +4514,7 @@ object Queries {
       val out = tempDirCleaned("graft-rollback-").toString
       val tio = new graft.tableio.TableIO(out, s)
       val snap0 = tio.commit(Map("src" -> "events"), Map("events" ->
-        s.read.parquet(p(dir, "events"))
+        table(s, dir, "events")
           .repartitionByRange(8, col("event_id"))
           .sortWithinPartitions("event_id")))
       tio.mergeTable(snap0, "events", mergeUpdates(s, dir), "event_id")
@@ -4607,7 +4612,7 @@ object Queries {
   }
 
   def q102MerkleRepair(s: SparkSession, dir: String): DataFrame =
-    merkleRepair(s.read.parquet(p(dir, "documents"))
+    merkleRepair(table(s, dir, "documents")
       .select("doc_id", "lang", "source", "n_chars", "text"))
 
   val q102Sql: String =
@@ -4677,7 +4682,7 @@ object Queries {
   }
 
   def q103KsDrift(s: SparkSession, dir: String): DataFrame =
-    ksDrift(s.read.parquet(p(dir, "documents")).select("lang", "n_chars"),
+    ksDrift(table(s, dir, "documents").select("lang", "n_chars"),
       "en")
 
   val q103Sql: String =
@@ -4725,7 +4730,7 @@ object Queries {
     * and each pass inherits q64's hot-block capping story. */
   def q104MultiBlock(s: SparkSession, dir: String): DataFrame = {
     ensureGraftRules(s)
-    val k = s.read.parquet(p(dir, "documents"))
+    val k = table(s, dir, "documents")
       .select(col("doc_id"), lower(substring(col("text"), 1, 24)).as("key"))
     def pass(start: Int) = {
       val kk = (if (start > 1) k.filter(length(col("key")) >= start + 3)
@@ -4831,7 +4836,7 @@ object Queries {
   }
 
   def q115GapFill(s: SparkSession, dir: String): DataFrame =
-    gapFill(s.read.parquet(p(dir, "events")).select("event_type", "ts"))
+    gapFill(table(s, dir, "events").select("event_type", "ts"))
 
   val q115Sql: String =
     """WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS h
@@ -4861,7 +4866,7 @@ object Queries {
     * in plain SQL. */
   def q116StreamMerge(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
     import org.apache.spark.sql.streaming.Trigger
-    val ev = s.read.parquet(p(dir, "events"))
+    val ev = table(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
     val out = tempDirCleaned("graft-stream-merge-out-").toString
     val tio = new graft.tableio.TableIO(out, s)
@@ -4924,7 +4929,7 @@ object Queries {
     compactBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-compact-").toString
       val tio = new graft.tableio.TableIO(out, s)
-      val ev = s.read.parquet(p(dir, "events"))
+      val ev = table(s, dir, "events")
       val snap0 = tio.commit(Map("src" -> "events"), Map("events" ->
         ev.filter(pmod(col("event_id"), lit(4)) === 0).coalesce(1)))
       val tl0 = snap0.tables("events")
@@ -4982,7 +4987,7 @@ object Queries {
     * nothing — that IS the ANN-join semantic (multiprobe, q28's recall
     * lever, widens it). */
   def q106KnnJoin(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(p(dir, "embeddings"))
+    val emb = table(s, dir, "embeddings")
     val n = graft.tableio.ParquetStats.rowCount(s, p(dir, "embeddings"))
     val bits = math.max(6,
       (math.log(n.toDouble + 1) / math.log(2)).ceil.toInt - 3)
@@ -5081,7 +5086,7 @@ object Queries {
   }
 
   def q107SlidingDistinct(s: SparkSession, dir: String): DataFrame =
-    slidingDistinct(s.read.parquet(p(dir, "events")).select("user_id", "ts"))
+    slidingDistinct(table(s, dir, "events").select("user_id", "ts"))
 
   val q107Sql: String =
     """WITH o AS (SELECT min(epoch_us(ts) // 86400000000) AS o,
@@ -5108,7 +5113,7 @@ object Queries {
     * bit-identically in ANSI SQL. Rademacher ±1 entries satisfy the JL
     * lemma like gaussians (Achlioptas 2001). */
   def q108RandomProjection(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(p(dir, "embeddings"))
+    val emb = table(s, dir, "embeddings")
       .withColumn("qv",
         expr("transform(embedding, x -> cast(floor(cast(x as double) * 1000) as bigint))"))
     val cols = (0 until 8).map { i =>
@@ -5130,7 +5135,7 @@ object Queries {
     dedupIdxBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-mhidx-").toString
       val tio = new graft.tableio.TableIO(out, s)
-      val base = s.read.parquet(p(dir, "documents"))
+      val base = table(s, dir, "documents")
         .filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
       val (buckets, sigs) = Dedup.minhashIndexTables(
         base, "doc_id", "text", shingleN = 5, k = 120, bands = 24)
@@ -5150,7 +5155,7 @@ object Queries {
     * region (the q14 argument); the oracle is the exact all-pairs twin
     * restricted to pairs touching the delta. */
   def q109IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(p(dir, "documents")).select("doc_id", "text")
+    val docs = table(s, dir, "documents").select("doc_id", "text")
     val base = docs.filter(col("doc_id") % 10 =!= 0)
     val normLen =
       length(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
@@ -5203,7 +5208,7 @@ object Queries {
   private def bloomDir(s: SparkSession, dir: String): String =
     bloomBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-bloom-").toString
-      s.read.parquet(p(dir, "events"))
+      table(s, dir, "events")
         .repartition(1)
         .sortWithinPartitions(md5(col("event_id").cast("string")))
         .write
@@ -5283,7 +5288,7 @@ object Queries {
     "shared boilerplate header bravo unit of exactly ten words"
 
   def q111LineDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(p(dir, "documents"))
+    val docs = table(s, dir, "documents")
       .select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(lit(q111HeaderA + " "), col("text")))
@@ -5331,7 +5336,7 @@ object Queries {
   def q112Auc(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type")
       .orderBy(col("value"), col("event_id"))
-    s.read.parquet(p(dir, "events"))
+    table(s, dir, "events")
       .select(col("event_type"), col("event_id"), col("value"),
         (col("user_id") % 5 === 0).cast("long").as("label"))
       .withColumn("r", row_number().over(w).cast("long"))
@@ -5373,7 +5378,7 @@ object Queries {
   private[graft] def partLayoutDir(s: SparkSession, dir: String): String =
     partLayoutBase.computeIfAbsent(dir, _ => {
       val out = tempDirCleaned("graft-part-").toString
-      s.read.parquet(p(dir, "events"))
+      table(s, dir, "events")
         .repartition(1)
         .write.partitionBy("event_type").parquet(s"$out/events_part")
       out

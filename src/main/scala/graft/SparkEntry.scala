@@ -1,5 +1,8 @@
 package graft
 
+import graft.engine.WavePhase
+import graft.tableio.ParquetStats
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -14,7 +17,48 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.crawlSeen(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every registered query, run in the regime its input size picks
+    * (`sized`). */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    bodies.map { case (name, body) => name -> sized(name, body) }
+
+  /** Input rows at or below which a query runs under the small-data
+    * profile. Set from the per-query crossing measurement in
+    * `BENCH/query_regime.md`. */
+  val SmallInputRows: Long = 100000L
+
+  /** The regime gate at the query entry. Before `body` runs, the rows of
+    * the `*.parquet` tables directly under `dir` are summed from their
+    * footers (no Spark job). At most `smallInputRows` rows: the body runs
+    * and its result is materialized (`localCheckpoint`) inside one
+    * `GraftSession.SmallData` scope; the body must run inside the scope,
+    * since several queries run their own actions while they build.
+    * Otherwise the body's lazy frame is returned as it is. Either way the
+    * body's jobs carry the label `query:<name>`. */
+  private[graft] def sized(
+      name: String, body: (SparkSession, String) => DataFrame,
+      smallInputRows: Long = SmallInputRows): (SparkSession, String) => DataFrame =
+    (spark, dir) => WavePhase.time(spark, s"query:$name") {
+      if (inputRows(spark, dir) <= smallInputRows)
+        GraftSession.withConf(spark, GraftSession.SmallData) {
+          body(spark, dir).localCheckpoint(eager = true)
+        }
+      else body(spark, dir)
+    }
+
+  /** Footer row count summed over the `*.parquet` tables directly under
+    * `dir` (0 when `dir` does not exist). */
+  private[graft] def inputRows(spark: SparkSession, dir: String): Long = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.isDirectory(p)) 0L
+    else fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .map(t => ParquetStats.rowCount(spark, t.toString)).sum
+  }
+
+  /** The registered query bodies, unwrapped. */
+  private[graft] def bodies: Map[String, (SparkSession, String) => DataFrame] = Map(
     // crawl engine (reference semantics; sbt parity gate)
     "crawl_seen" -> (Queries.crawlSeen _),
     "crawl_order" -> (Queries.crawlOrder _),

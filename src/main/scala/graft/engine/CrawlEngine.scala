@@ -319,36 +319,6 @@ class CrawlEngine(
     crawlLoop(io.table(snap, "queue"), io.table(snap, "outer_queue"), size = None)
   }
 
-  // ---- adaptive execution profile: a SMALL wave is pure driver/stage
-  // latency — AQE's per-stage re-optimization jobs and a wide shuffle
-  // fan-out cost more than they save (measured ~30% of fixture-crawl wall
-  // time), so a wave whose queue is known to hold at most SmallRankRows
-  // rows runs, together with its snapshot commit, inside a withConf scope
-  // of SmallWaveConf; big waves and waves of unknown size run with the
-  // session's settings (AQE coalescing/skew handling is load-bearing at
-  // scale). The scope restores the session on every exit path.
-  private val SmallWaveConf = Map(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "4",
-    // broadcast joins cost one EXTRA async job per join per action
-    // (BroadcastExchange builds on its own thread pool; exchange
-    // reuse is within-query only, so every wave action rebuilds
-    // them) — ~30 of the fixture crawl's 45 jobs were broadcast
-    // builds. A tiny wave's joins run as inline 4-partition hash
-    // joins instead: the work rides the action's own job and the
-    // per-wave job count collapses to the named actions.
-    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-    // round-6 (verdict #1): the WavePhase timers put 60-75% of the
-    // small-wave floor in DRIVER time, not job execution — dominated
-    // by per-action whole-stage-codegen + expression compilation
-    // (janino), which a <=1024-row wave can never amortize (and wave
-    // plans embed per-wave literals, so the codegen cache misses
-    // every wave). Interpreted execution flips that trade: measured
-    // fixture-crawl steady 7.3s -> ~4s, cold 16.5s -> ~10s. Big
-    // waves keep codegen (it IS the right plan at scale).
-    "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-
   // main loop (spiderfetch.py:209-231), entered at the cursor's rule and
   // depth. `size` is the queue's row count when it is known to be
   // non-empty: after a wave, its discovered count; for the seed, 1. It is
@@ -386,8 +356,11 @@ class CrawlEngine(
               val (fq, sq) = splitQueue(queue, cur.ruleIdx == rules.length - 1)
               queue = fq; outer = sq
             }
+            // a wave known to hold at most SmallRankRows rows runs, with
+            // its snapshot commit, under the small-data profile; big waves
+            // and waves of unknown size keep the session's settings
             val waveConf =
-              if (known.exists(_ <= SmallRankRows)) SmallWaveConf
+              if (known.exists(_ <= SmallRankRows)) GraftSession.SmallData
               else Map.empty[String, String]
             GraftSession.withConf(spark, waveConf) {
               processWave(queue, rule, mustRunWave).map { w =>

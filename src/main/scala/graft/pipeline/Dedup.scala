@@ -310,27 +310,26 @@ object Dedup {
         Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    // small-corpus execution profile (round 6, same rationale as the
-    // crawl's small-wave profile): below slimRejoinMinDocs everything
-    // after the signature pass is broadcast-sized, and AQE's per-exchange
-    // stage jobs + the 32-partition shuffles are pure dispatch latency —
-    // the 9-job cascade was ~60% of steady wall (WavePhase table in
-    // OPTIMIZATION_r06.md; A/B: 1.2-1.8s vs 1.8-5.1s steady). The gate is
-    // DATA size, not host shape: at production scale the big regime keeps
-    // AQE/session settings untouched.
+    // small corpus (below slimRejoinMinDocs): everything after the
+    // signature pass is broadcast-sized, and AQE's per-exchange stage jobs,
+    // wide shuffles and codegen are pure dispatch latency, so the rest runs
+    // under the small-data profile (the 9-job cascade was ~60% of steady
+    // wall, OPTIMIZATION_r06.md). At sf0.1 (5,000 docs, 4-core host, 6
+    // fresh-JVM runs per side, median of 3 warm calls each) it took 1.88 s
+    // (quartiles 1.83-2.16) against 2.16 s (1.93-2.40) for a private
+    // AQE-off, 8-partition profile; it won 5 of 6 pairs. The gate is DATA
+    // size, not host shape: a big corpus keeps the session's settings.
     val profile =
-      if (nDocs < slimRejoinMinDocs) Map(
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> "8")
+      if (nDocs < slimRejoinMinDocs) GraftSession.SmallData
       else Map.empty[String, String]
     GraftSession.withConf(spark, profile) {
     val sigEst = size(filter(zip_with(col("sig_a"), col("sig_b"),
       (x, y) => x === y), b => b)).cast("double") / k
     // Rejoin regime flips on corpus size (count already in hand — no extra
     // job). SMALL corpus (< slimRejoinMinDocs): the sigs side of the
-    // rejoin is broadcast-sized, so carrying (sig, sh) TOGETHER through
-    // one pair of joins costs nothing extra on the wire (nothing shuffles)
-    // and removes two whole join stages of driver latency — at bench scale
+    // rejoin is small, so carrying (sig, sh) TOGETHER through one pair of
+    // joins costs little extra on the wire and removes two whole join
+    // stages of driver latency — at bench scale
     // that latency IS the query. LARGE corpus: the rejoins are shuffle
     // joins, prefilter-doomed candidates must not drag their wide shingle
     // arrays through the exchange (~2.4e-4 of all pairs band-collide at
