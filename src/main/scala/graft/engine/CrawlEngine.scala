@@ -6,7 +6,7 @@ import graft.urlcanon.UrlRewrite
 import graft.extract.Extract
 import graft.seenset.{SeenFilter, SeenSet}
 import graft.tableio.{Snapshot, TableIO}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import scala.collection.immutable.ListMap
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -36,7 +36,8 @@ import org.apache.spark.sql.expressions.Window
  * of Spark actions regardless of corpus — (1) one cache-warming aggregation
  * that yields batch size, per-partition lineage, error/redirect/retry
  * counts and fetched bytes in a single pass; (2) the ordering rank's
- * materialize + one count pass (which also folds in the discovered-count);
+ * materialize + one count pass (which also folds in the next queue's size
+ * and the sizes of its depth-0 split halves);
  * (3) one sketch-build aggregation when the bloom bank is enabled. Empty
  * checks, `discovered.count()`, and the frontier pre-count are all derived
  * from (1)-(2) instead of separate jobs; deep crawls are wave-latency
@@ -79,13 +80,10 @@ class CrawlEngine(
   /** The nine append-only crawl tables, in snapshot order, each with the
     * empty frame of a table nothing was appended to yet. Every
     * materialization, commit and compaction iterates this list. */
-  private val AppendTables: ListMap[String, () => DataFrame] = {
-    def t[T: Encoder](name: String) = name -> (() => spark.emptyDataset[T].toDF)
-    ListMap(t[Seen]("seen"), t[ProcessedRow]("processed"), t[DumpRow]("dump"),
-      t[Edge]("edges"), t[Alias]("aliases"), t[FetchLogEntry]("fetch_log"),
-      t[RobotsBlockedRow]("robots_blocked"), t[WaveMetrics]("metrics"),
-      t[FetchedRaw]("fetched"))
-  }
+  private val AppendTables: ListMap[String, DataFrame] =
+    CrawlEngine.AppendTableEncoders.map { case (n, enc) =>
+      n -> spark.emptyDataset(enc).toDF
+    }
 
   // ---- incremental snapshot commits (Iceberg append model): per table,
   // the DELTA accumulated since the last commit — commitWave writes ONLY
@@ -94,15 +92,34 @@ class CrawlEngine(
   // round-3 full rewrite was O(waves × total) write amplification).
   // Tracked only in checkpointed mode: in-memory crawls never reset the
   // delta plans, which would otherwise grow unbounded with depth.
-  /** Append `rows` to table `name`: extends its full frame and its delta. */
-  private def append(name: String, rows: DataFrame): Unit = {
-    val delta =
-      if (checkpoint.isEmpty) frames.delta
-      else frames.delta.updated(name,
-        frames.delta.get(name).fold(rows)(_.unionByName(rows)))
-    frames = frames.copy(
-      full = frames.full.updated(name, frames.full(name).unionByName(rows)),
-      delta = delta)
+  /** Append `rows` to table `name`. Checkpointed mode builds them now and
+    * extends the table's full frame and its delta. In-memory mode builds
+    * only `seen` now, the one table the waves read back; the other tables
+    * keep the thunk until `build` (first read in `tables`, or compaction),
+    * so a thunk must capture every per-batch value it uses in a val. */
+  private def append(name: String, rows: => DataFrame): Unit =
+    if (checkpoint.isEmpty && name != "seen")
+      frames = frames.copy(deferred = frames.deferred.updated(name,
+        frames.deferred.getOrElse(name, Vector.empty) :+ (() => rows)))
+    else {
+      val df = rows
+      val delta =
+        if (checkpoint.isEmpty) frames.delta
+        else frames.delta.updated(name,
+          frames.delta.get(name).fold(df)(_.unionByName(df)))
+      frames = frames.copy(
+        full = frames.full.updated(name, frames.full(name).unionByName(df)),
+        delta = delta,
+        seenPieces = frames.seenPieces + (if (name == "seen") 1 else 0))
+    }
+
+  /** Table `name` with its deferred appends built into its full frame. */
+  private def build(name: String): DataFrame = {
+    val df = frames.deferred.getOrElse(name, Vector.empty)
+      .foldLeft(frames.full(name))((acc, rows) => acc.unionByName(rows()))
+    frames = frames.copy(full = frames.full.updated(name, df),
+      deferred = frames.deferred - name)
+    df
   }
 
   /** Re-read every append table from `snap`, which becomes the base the
@@ -110,7 +127,7 @@ class CrawlEngine(
     * it truncates lineage and pins the state to the snapshot). */
   private def load(io: TableIO, snap: Snapshot): Unit =
     frames = Frames(AppendTables.map { case (n, _) => n -> io.table(snap, n) },
-      Map.empty, Some(snap))
+      base = Some(snap))
 
   // Cached DataFrames of in-flight waves (round-2 advice: persists without
   // a matching unpersist accumulate dead blocks over a deep crawl). Every
@@ -125,20 +142,30 @@ class CrawlEngine(
   }
   private val CompactWaves = 8
 
+  /** Checkpoints `seen` once its union is wider than CompactWaves pieces.
+    * Every piece is already materialized and a plain wave appends one or
+    * two, so the compaction bounds the width; a per-host-budget wave
+    * appends one per chunk, and its chunk loop calls this. */
+  private def boundSeen(): Unit =
+    if (frames.seenPieces > CompactWaves)
+      frames = frames.copy(full = frames.full.updated("seen",
+        frames.full("seen").localCheckpoint(true)), seenPieces = 1)
+
   private def tables: CrawlTables = {
-    // LAZY per-table materialization: each base table localCheckpoints on
-    // first ACCESS (downstream consumers collect repeatedly), so a caller
-    // that only reads `seen` — the bench's crawl path — pays none of the
-    // other tables' checkpoint actions. `seen` is never checkpointed here:
-    // the waves already truncate it. The wave caches (pins) release once
-    // every other table has materialized; until then they back the
+    // LAZY per-table materialization: each base table is built from its
+    // deferred appends and localCheckpoints on first ACCESS (downstream
+    // consumers collect repeatedly), so a caller that only reads `seen` —
+    // the bench's crawl path — pays none of the other tables' plan builds
+    // or checkpoint actions. `seen` is never checkpointed here: every piece
+    // of it is a materialized rank output. The wave caches (pins) release
+    // once every other table has materialized; until then they back the
     // un-materialized unions.
     val inMem = checkpoint.isEmpty
     val done = scala.collection.mutable.Set.empty[String]
     def table(name: String): DataFrame = this.synchronized {
       if (inMem && name != "seen" && done.add(name)) {
-        frames = frames.copy(full = frames.full.updated(name,
-          frames.full(name).localCheckpoint(true)))
+        val df = build(name).localCheckpoint(true)
+        frames = frames.copy(full = frames.full.updated(name, df))
         if (done.size == AppendTables.size - 1) releasePins()
       }
       frames.full(name)
@@ -181,7 +208,8 @@ class CrawlEngine(
 
   // ---------------------------------------------------------------- utils
 
-  private def emptyFrontier: DataFrame = spark.emptyDataset[FrontierRecord].toDF
+  private val emptyFrontier: DataFrame =
+    spark.emptyDataset(CrawlEngine.FrontierEnc).toDF
 
   private def frontierRow(url: String, mode: Int, wave: Int, seq: Long): FrontierRecord =
     FrontierRecord(url, UrlRewrite.canonicalUrl(url), UrlRewrite.canonicalHost(url),
@@ -195,10 +223,10 @@ class CrawlEngine(
   private val SmallRankRows = 1024L
 
   /** Ranked output: the frame with the rank column (MATERIALIZED — safe to
-    * feed the next wave), row count, countPred count, and — on the
-    * driver-local path — the collected pre-rank rows (callers reuse them
-    * to skip follow-up jobs, e.g. driver-side sketch inserts). */
-  private final case class RankedOut(df: DataFrame, total: Long, predN: Long,
+    * feed the next wave), row count, one count per `countPreds` predicate,
+    * and — on the driver-local path — the collected pre-rank rows (callers
+    * reuse them to skip follow-up jobs, e.g. driver-side sketch inserts). */
+  private final case class RankedOut(df: DataFrame, total: Long, predN: Seq[Long],
                                      localRows: Option[Array[org.apache.spark.sql.Row]])
 
   /**
@@ -218,7 +246,7 @@ class CrawlEngine(
    *    DataFrame ops — no RDD zipWithIndex hop out of Tungsten (round-1
    *    verdict #6): range-shuffle by the key, sort within partitions,
    *    then per-partition offsets from one count-per-partition pass over
-   *    the materialized result; that pass also evaluates `countPred`.
+   *    the materialized result; that pass also counts `countPreds`.
    *  - small (`small = true`): ONE collect job + a driver sort into a
    *    LocalRelation — deep fixture-sized waves are driver-action-latency
    *    bound, and this path has no shuffle, no sampling job, no
@@ -227,7 +255,7 @@ class CrawlEngine(
    */
   private def withOrderedIndex(df: DataFrame, sortCols: Seq[String],
                                name: String, offset: Long,
-                               countPred: Option[(Column, org.apache.spark.sql.Row => Boolean)] = None,
+                               countPreds: Seq[(Column, org.apache.spark.sql.Row => Boolean)] = Nil,
                                small: Boolean = false): RankedOut = {
     if (small) {
       import scala.jdk.CollectionConverters._
@@ -247,7 +275,7 @@ class CrawlEngine(
         }
       }
       val sorted = rows.sorted(ord)
-      val predN = countPred.map(p => sorted.count(p._2).toLong).getOrElse(0L)
+      val predN = countPreds.map(p => sorted.count(p._2).toLong)
       val outRows: Seq[org.apache.spark.sql.Row] = sorted.zipWithIndex.map {
         case (r, i) =>
           org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (offset + i))
@@ -257,7 +285,6 @@ class CrawlEngine(
       val out = spark.createDataFrame(outRows.asJava, outSchema)
       return RankedOut(out, sorted.length.toLong, predN, Some(sorted))
     }
-    val pred = countPred.map(_._1).getOrElse(lit(false))
     val keys = sortCols.map(col)
     // localCheckpoint: the ranked output feeds the NEXT wave's plans —
     // without truncation the logical plan grows with every wave and
@@ -269,14 +296,19 @@ class CrawlEngine(
       .withColumn("_g_mid", monotonically_increasing_id())
       .localCheckpoint(true)
     val parts = mid.groupBy(shiftright(col("_g_mid"), 33).as("_g_pid"))
-      .agg(count(lit(1)).as("_n"), sum(when(pred, 1L).otherwise(0L)).as("_p"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val total = parts.map(_._2).sum
-    val predN = parts.map(_._3).sum
+      .agg(count(lit(1)).as("_n"), countPreds.map { case (p, _) =>
+        sum(when(p, 1L).otherwise(0L)) }: _*)
+      .collect().sortBy(_.getLong(0))
+    val total = parts.map(_.getLong(1)).sum
+    val predN = countPreds.indices.map(i => parts.map(_.getLong(2 + i)).sum)
     var acc = 0L
-    val offRows = parts.map { case (pid, n, _) => val o = acc; acc += n; (pid, o) }
-    import spark.implicits._
-    val offDf = broadcast(offRows.toSeq.toDF("_g_pid", "_g_off"))
+    val offRows = parts.map { r =>
+      val o = acc; acc += r.getLong(1)
+      org.apache.spark.sql.Row(r.getLong(0), o)
+    }
+    import scala.jdk.CollectionConverters._
+    val offDf = broadcast(spark.createDataFrame(offRows.toSeq.asJava,
+      CrawlEngine.OffsetSchema))
     val out = mid.withColumn("_g_pid", shiftright(col("_g_mid"), 33))
       .join(offDf, Seq("_g_pid"))
       .withColumn(name, col("_g_off") +
@@ -291,18 +323,19 @@ class CrawlEngine(
   // ------------------------------------------------------------ lifecycle
 
   def run(): CrawlTables = {
-    frames = Frames(AppendTables.map { case (n, empty) => n -> empty() },
-      Map.empty, None)
+    frames = Frames(AppendTables, base = None)
     cur = CrawlCursor(ruleIdx = 0, depth = rules.head.depth, wave = 0,
       seqCounter = 1L, batchOrd = 0L, processedRows = 0L, SeenFilter.empty)
     if (useSketch)
       cur.sketch.addOne(seedUrl, UrlRewrite.canonicalHost(seedUrl))
     // the seed row is pre-first-commit content: it IS seen's first append
-    append("seen", Seq(Seen(seedUrl, UrlRewrite.canonicalHost(seedUrl), 0, 0L)).toDF)
-    // the seed queue's size IS known (1 row): the first wave may use the
-    // small-wave execution profile
-    crawlLoop(Seq(frontierRow(seedUrl, Mode.SPIDER, 0, 0L)).toDF, emptyFrontier,
-      size = Some(1L))
+    append("seen", spark.createDataset(Seq(Seen(seedUrl,
+      UrlRewrite.canonicalHost(seedUrl), 0, 0L)))(CrawlEngine.SeenEnc).toDF)
+    // the seed queue's size IS known (1 SPIDER row): the first wave may use
+    // the small-wave execution profile; the outer queue is known empty
+    crawlLoop(spark.createDataset(Seq(frontierRow(seedUrl, Mode.SPIDER, 0, 0L)))(
+      CrawlEngine.FrontierEnc).toDF, emptyFrontier,
+      size = Some(QueueSize(1L, 0L, 1L)), outerSize = Some(QueueSize.Empty))
   }
 
   /** Resume from the latest snapshot: identical final state to an
@@ -315,56 +348,65 @@ class CrawlEngine(
       throw new IllegalStateException("no snapshot to resume from"))
     load(io, snap)
     cur = CrawlCursor.fromMeta(snap.meta)
-    // resumed queue size unknown: the first wave runs the big-wave profile
-    crawlLoop(io.table(snap, "queue"), io.table(snap, "outer_queue"), size = None)
+    // resumed queue sizes unknown: the first wave runs the big-wave profile
+    crawlLoop(io.table(snap, "queue"), io.table(snap, "outer_queue"),
+      size = None, outerSize = None)
   }
 
   // main loop (spiderfetch.py:209-231), entered at the cursor's rule and
-  // depth. `size` is the queue's row count when it is known to be
-  // non-empty: after a wave, its discovered count; for the seed, 1. It is
-  // None when nothing is known — at rule entry (the outer queue can be
-  // large, so the wave must NOT inherit the previous rule's last size and
-  // run the small-wave profile, round-3 advice #2) and at resume. The
-  // reference's `while queue` guard tests the PRE-split queue — a wave
-  // still runs (and is counted) when the depth-0 split leaves the fetch
-  // half empty. Emptiness is NOT pre-checked with a limit(1).count job on
-  // the steady path: an unknown queue lets processWave detect it from its
-  // first aggregation (no wave recorded), or — when a split would destroy
-  // the evidence — pays a one-time probe job.
+  // depth. `size` and `outerSize` are the two queues' sizes when known:
+  // the seed queue's, then each wave's discoveries (counted by its rank
+  // pass), and across a depth-0 split the two halves' counts. The outer
+  // queue's size becomes the queue's at rule entry. Both are None only
+  // after a resume. The reference's `while queue` guard tests the
+  // PRE-split queue — a wave still runs (and is counted) when the depth-0
+  // split leaves the fetch half empty; that known-empty wave runs no job.
+  // An unknown queue lets processWave detect emptiness from its first
+  // aggregation (no wave recorded), or — when a split would destroy the
+  // evidence — pays a one-time probe job.
   private def crawlLoop(startQueue: DataFrame, startOuter: DataFrame,
-                        size: Option[Long]): CrawlTables = {
+                        size: Option[QueueSize],
+                        outerSize: Option[QueueSize]): CrawlTables = {
     var queue = startQueue
     var outer = startOuter
     var known = size
+    var outerKnown = outerSize
     while (cur.ruleIdx < rules.length) {
       val rule = rules(cur.ruleIdx)
       var more = true
       while (more) {
         // pre-split emptiness decides whether a wave runs; at depth 0 an
-        // unknown queue is probed (rule entry with a depth-0 rule, resume
-        // right after a rule's split wave). The probe proves non-emptiness,
-        // not size: `known` stays None.
-        val mustRunWave = known.isDefined ||
-          (cur.depth == 0 && queue.limit(1).count() > 0)
+        // unknown queue is probed (resume right after a rule's split wave,
+        // or a rule entered after a resume). The probe proves
+        // non-emptiness, not size: `known` stays None.
+        val mustRunWave = known.fold(
+          cur.depth == 0 && queue.limit(1).count() > 0)(_.rows > 0)
         val ran =
           // the reference splits only a non-empty queue: an empty one
           // keeps the outer queue for the next rule
-          if (cur.depth == 0 && !mustRunWave) None
+          if (!mustRunWave && (cur.depth == 0 || known.isDefined)) None
           else {
+            var waveSize = known
             if (cur.depth > 0) cur = cur.copy(depth = cur.depth - 1)
             else {
-              val (fq, sq) = splitQueue(queue, cur.ruleIdx == rules.length - 1)
+              val lastRule = cur.ruleIdx == rules.length - 1
+              val (fq, sq) = splitQueue(queue, lastRule)
               queue = fq; outer = sq
+              waveSize = known.map(k => QueueSize(k.fetch, k.fetch, 0L))
+              outerKnown =
+                if (lastRule) Some(QueueSize.Empty)
+                else known.map(k => QueueSize(k.spider, 0L, k.spider))
             }
             // a wave known to hold at most SmallRankRows rows runs, with
             // its snapshot commit, under the small-data profile; big waves
             // and waves of unknown size keep the session's settings
             val waveConf =
-              if (known.exists(_ <= SmallRankRows)) GraftSession.SmallData
+              if (waveSize.exists(_.rows <= SmallRankRows)) GraftSession.SmallData
               else Map.empty[String, String]
             GraftSession.withConf(spark, waveConf) {
-              processWave(queue, rule, mustRunWave).map { w =>
-                commitWave(w.next, outer, w.appendLocal)
+              processWave(queue, rule, mustRunWave,
+                knownEmpty = waveSize.exists(_.rows == 0)).map { w =>
+                commitWave(w.next, outer)
                 w
               }
             }
@@ -374,8 +416,8 @@ class CrawlEngine(
             queue = w.next
             if (stopAfterWaves.exists(cur.wave >= _)) return tables
             // processWave already counted its discoveries — no extra job
-            known = Some(w.discoveredN).filter(_ > 0)
-            more = known.isDefined
+            known = Some(w.size)
+            more = w.size.rows > 0
           case None => // queue was empty: no wave ran, rule is done
             more = false
         }
@@ -383,9 +425,10 @@ class CrawlEngine(
       val next = cur.ruleIdx + 1
       cur = cur.copy(ruleIdx = next)
       if (next < rules.length) {
-        // rule entry: the outer queue becomes the queue, its size unknown
+        // rule entry: the outer queue becomes the queue, with its size
         cur = cur.copy(depth = rules(next).depth)
-        queue = outer; outer = emptyFrontier; known = None
+        queue = outer; known = outerKnown
+        outer = emptyFrontier; outerKnown = Some(QueueSize.Empty)
       }
     }
     tables
@@ -409,35 +452,32 @@ class CrawlEngine(
   /** One batch's outputs: the next-wave fragment, this wave's retry
     * records, the counts the caller needs (all derived from jobs the batch
     * runs anyway — no follow-up count actions), and the batch's share of
-    * the wave tallies: errors, completed-fetch bytes, per-partition
-    * (rows, errors, bytes) of the fetch join (A4), and whether every
-    * append to `seen` came from the driver-local rank path. */
+    * the wave tallies: errors, completed-fetch bytes and per-partition
+    * (rows, errors, bytes) of the fetch join (A4). */
   private final case class BatchOut(
       discovered: DataFrame, retries: DataFrame,
-      rows: Long, discoveredN: Long, retryN: Long,
+      rows: Long, discoveredN: QueueSize, retryN: Long,
       errors: Long = 0L, bytes: Long = 0L,
-      partStats: Map[Int, (Long, Long, Long)] = Map.empty,
-      appendLocal: Boolean = true)
+      partStats: Map[Int, (Long, Long, Long)] = Map.empty)
   private def emptyBatch =
-    BatchOut(emptyFrontier, emptyFrontier, 0L, 0L, 0L)
+    BatchOut(emptyFrontier, emptyFrontier, 0L, QueueSize.Empty, 0L)
 
-  /** One wave's outputs: the next queue, its row count, and whether the
-    * wave's `seen` appends were all driver-local relations (the union tree
-    * is then all LocalRelation leaves — cheap to analyze, nothing to
-    * recompute, so the per-wave truncation can wait for the periodic
-    * compaction). */
-  private final case class WaveOut(next: DataFrame, discoveredN: Long,
-                                   appendLocal: Boolean)
+  /** One wave's outputs: the next queue and its size. */
+  private final case class WaveOut(next: DataFrame, size: QueueSize)
 
   /** Runs one wave; returns its outputs, or None when no wave ran — the
     * reference's `while queue` guard, detected from the batch aggregation
     * instead of a pre-count job. `mustRunWave` = the caller KNOWS the
     * reference would run this wave (pre-split queue non-empty), so an
-    * empty post-split batch still counts as a (zero-row) wave. */
+    * empty post-split batch still counts as a (zero-row) wave.
+    * `knownEmpty` = the caller knows `queue` is empty (the fetch half of
+    * a split that kept no row): the wave counts but runs no job. */
   private def processWave(queue: DataFrame, rule: RecipeRule,
-                          mustRunWave: Boolean): Option[WaveOut] =
+                          mustRunWave: Boolean,
+                          knownEmpty: Boolean): Option[WaveOut] =
     WavePhase.time(spark, "wave_total") {
-      processWave0(queue, rule, mustRunWave)
+      if (knownEmpty) Some(WaveOut(emptyFrontier, recordWave(cur.wave + 1, 0L, Nil)))
+      else processWave0(queue, rule, mustRunWave)
     }
 
   private def processWave0(queue: DataFrame, rule: RecipeRule,
@@ -491,23 +531,31 @@ class CrawlEngine(
           // arithmetic instead of a count job: chunk rows leave pending,
           // retry rows re-enter it
           pendingCount = pendingCount - b.rows + b.retryN
+          boundSeen()
         }
     }
-    cur = cur.copy(wave = wave)
+    Some(WaveOut(discovered, recordWave(wave, frontierRows, batches.toSeq)))
+  }
 
+  /** Counts wave `wave` and appends its metrics rows; returns the size of
+    * the wave's discoveries, the next queue. */
+  private def recordWave(wave: Int, frontierRows: Long,
+                         batches: Seq[BatchOut]): QueueSize = {
+    cur = cur.copy(wave = wave)
     // per-partition lineage metrics (north rule): rows fetched, errors and
     // completed bytes per physical partition of the wave's fetch join (A4)
-    val discoveredN = batches.map(_.discoveredN).sum
+    val discoveredN = batches.map(_.discoveredN).foldLeft(QueueSize.Empty)(_ + _)
+    val ruleIdx = cur.ruleIdx
     val partRows = batches.flatMap(_.partStats)
       .groupMapReduce(_._1)(_._2)((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
       .toSeq.sortBy(_._1).map { case (pid, (n, e, b)) =>
-        WaveMetrics(wave, cur.ruleIdx, pid, n, n, e, 0L, b)
+        WaveMetrics(wave, ruleIdx, pid, n, n, e, 0L, b)
       }
-    val totalRow = WaveMetrics(wave, cur.ruleIdx, -1, frontierRows, frontierRows,
-      batches.map(_.errors).sum, discoveredN, batches.map(_.bytes).sum)
-    append("metrics", (partRows :+ totalRow).toDF)
-
-    Some(WaveOut(discovered, discoveredN, batches.forall(_.appendLocal)))
+    val rows = partRows :+ WaveMetrics(wave, ruleIdx, -1, frontierRows,
+      frontierRows, batches.map(_.errors).sum, discoveredN.rows,
+      batches.map(_.bytes).sum)
+    append("metrics", spark.createDataset(rows)(CrawlEngine.WaveMetricsEnc).toDF)
+    discoveredN
   }
 
   /**
@@ -593,27 +641,28 @@ class CrawlEngine(
 
     // ---- processed log (the crawl-ordering parity surface): recorded
     // lazily under the (batch_ord, seq) total order; the dense global
-    // `ord` is ranked once at tables() — no per-batch ranking actions
+    // `ord` is ranked once at tables() — no per-batch ranking actions.
+    // The appends below may build late (in-memory mode): they read the
+    // batch ordinal from this val, never from the moving cursor.
+    val batchOrd = cur.batchOrd
     WavePhase.time(spark, "logs_build") {
     append("processed",
-      joined.select(lit(cur.batchOrd).as("batch_ord"), col("seq"),
+      joined.select(lit(batchOrd).as("batch_ord"), col("seq"),
         lit(wave).as("wave"), col("url"), col("mode"), col("retry")))
 
     // ---- fetch log: every LAUNCH of every record (in-fetch TRIES retries
     // expand to one row per temporal launch, fetch.py:650-664) + each
     // reached chain hop's launches
-    val originLog = CrawlEngine.expandFetchLog(
+    append("fetch_log", CrawlEngine.expandFetchLog(
       joined.select(col("url"), col("mode"), lit(wave).as("wave"),
-        col("attempt"), col("outcome"), col("fail_attempts")), tries)
-    val logAll = analysis match {
-      case Some(a) => originLog.unionByName(CrawlEngine.expandFetchLog(
+        col("attempt"), col("outcome"), col("fail_attempts")), tries))
+    analysis.foreach { a =>
+      append("fetch_log", CrawlEngine.expandFetchLog(
         a.validHops.select(col("alias_url").as("url"), col("mode"),
           lit(wave).as("wave"), col("attempt"),
           col("to_outcome").as("outcome"),
           col("to_fail").as("fail_attempts")), tries))
-      case None => originLog
     }
-    append("fetch_log", logAll)
 
     // ---- S5 fetched-file sink: FETCH-mode records move their file to a
     // collision-safe final name (spiderfetch.py:163-165); redirected
@@ -621,15 +670,15 @@ class CrawlEngine(
     append("fetched",
       joined.filter(col("mode") === Mode.FETCH &&
           col("outcome") =!= ErrorCode.REDIRECT)
-        .select(lit(cur.batchOrd).as("batch_ord"), col("seq"),
+        .select(lit(batchOrd).as("batch_ord"), col("seq"),
           lit(wave).as("wave"), col("url")))
     analysis.foreach { a =>
       append("fetched",
         a.finals.filter(col("mode") === Mode.FETCH && !col("aborted"))
-          .select(lit(cur.batchOrd).as("batch_ord"), col("seq"),
+          .select(lit(batchOrd).as("batch_ord"), col("seq"),
             lit(wave).as("wave"), col("final_url").as("url")))
     }
-    cur = cur.copy(batchOrd = cur.batchOrd + 1)
+    cur = cur.copy(batchOrd = batchOrd + 1)
 
     // ---- edges: every matched url, seen or not, self-loops excluded
     // (web.py:44-50)
@@ -687,19 +736,22 @@ class CrawlEngine(
         .unionByName(discEvents)
       case None => discEvents
     }
-    // the rank's one pass also answers "how many next-wave records" —
-    // the former discovered.count() job
+    // the rank's one pass also answers "how many next-wave records, and
+    // how many in each half of a depth-0 split" — the former
+    // discovered.count() job and the split's emptiness probes
+    def flag(c: String) = (col(c), (r: org.apache.spark.sql.Row) => r.getAs[Boolean](c))
     val rk = WavePhase.time(spark, "event_rank") {
       withOrderedIndex(events,
         Seq("pos", "phase", "idx"), "new_seq", cur.seqCounter,
-        countPred = Some((col("m_fetch") || col("m_spider"),
+        countPreds = Seq((col("m_fetch") || col("m_spider"),
           (r: org.apache.spark.sql.Row) =>
-            r.getAs[Boolean]("m_fetch") || r.getAs[Boolean]("m_spider"))),
+            r.getAs[Boolean]("m_fetch") || r.getAs[Boolean]("m_spider")),
+          flag("m_fetch"), flag("m_spider")),
         small = batchRows <= SmallRankRows)
     }
     val ranked = rk.df
     val nNew = rk.total
-    val discoveredN = rk.predN
+    val discoveredN = QueueSize(rk.predN(0), rk.predN(1), rk.predN(2))
     cur = cur.copy(seqCounter = cur.seqCounter + nNew)
 
     WavePhase.time(spark, "post_rank_build") {
@@ -795,7 +847,7 @@ class CrawlEngine(
       case None => (retryNR, temporalN)
     }
     BatchOut(discovered, retries, batchRows, discoveredN, retryN,
-      errors, bytes, partStats, appendLocal = rk.localRows.isDefined)
+      errors, bytes, partStats)
   }
 
   /**
@@ -854,8 +906,7 @@ class CrawlEngine(
   /** (total seconds spent committing snapshots, number of commits). */
   def commitStats: (Double, Int) = (commitNanos / 1e9, commitCount)
 
-  private def commitWave(queue: DataFrame, outer: DataFrame,
-                         appendLocal: Boolean): Unit = {
+  private def commitWave(queue: DataFrame, outer: DataFrame): Unit = {
     // every CompactWaves-th wave compacts: see both branches below
     val compact = cur.wave % CompactWaves == 0
     checkpoint match {
@@ -874,7 +925,7 @@ class CrawlEngine(
           else frames.base.flatMap(_.tables.get(name))
             .fold(TableWrite(delta))(t => TableWrite(delta, t.files, t.rows))
         def deltaOf(name: String) =
-          frames.delta.getOrElse(name, AppendTables(name)())
+          frames.delta.getOrElse(name, AppendTables(name))
         val appendWrites = AppendTables.keys.map(name =>
           name -> write(name, frames.full(name), deltaOf(name))).toMap
         // S2 fetch-state rows derive per fetched url (append-only too):
@@ -894,22 +945,18 @@ class CrawlEngine(
         commitCount += 1
       case None =>
         // in-memory mode: only `seen` is re-read during the crawl (dedup
-        // anti-joins, redirect dup checks) — eager-truncate just it per
-        // wave UNLESS this wave appended only driver-local relations (no
-        // job; the periodic compaction below still bounds the union
-        // depth) or the compaction checkpoints it anyway; append-only
-        // tables stay lazy and materialize once in tables() — EXCEPT on
-        // deep crawls, where the lazy unions would keep every wave's
-        // caches pinned: compact every CompactWaves waves (checkpoint
-        // every table, release pins) so block-manager storage stays
-        // bounded by the window, not the crawl depth (round-2 advice #1)
-        if (!appendLocal && !compact) WavePhase.time(spark, "seen_truncate") {
-          frames = frames.copy(full = frames.full.updated("seen",
-            frames.full("seen").localCheckpoint(true)))
-        }
+        // anti-joins, redirect dup checks), and every piece of it is a
+        // materialized rank output, so no wave truncates it; the other
+        // tables stay deferred and build once in tables() — EXCEPT on
+        // deep crawls, where the deferred unions would keep every wave's
+        // caches pinned: compact every CompactWaves waves (build and
+        // checkpoint every table, release pins) so block-manager storage
+        // and the union width stay bounded by the window, not the crawl
+        // depth (round-2 advice #1)
         if (compact) WavePhase.time(spark, "compaction") {
-          frames = frames.copy(full = AppendTables.keys.map(name =>
-            name -> frames.full(name).localCheckpoint(true)).toMap)
+          val full = AppendTables.keys.map(name =>
+            name -> build(name).localCheckpoint(true)).toMap
+          frames = frames.copy(full = full, seenPieces = 1)
           releasePins()
         }
     }
@@ -920,11 +967,25 @@ class CrawlEngine(
   }
 }
 
-/** The append tables as frames: `full` per table, and — checkpointed mode
-  * only — `delta`, the rows appended since `base`, the last commit. */
+/** The append tables as frames: `full` per table; in-memory mode only,
+  * `deferred`, the appends not built into `full` yet; checkpointed mode
+  * only, `delta`, the rows appended since `base`, the last commit; and
+  * `seenPieces`, the width of `seen`'s union (its pieces since the frame
+  * was last read or checkpointed whole). */
 private final case class Frames(full: Map[String, DataFrame],
-                                delta: Map[String, DataFrame],
-                                base: Option[Snapshot])
+                                deferred: Map[String, Vector[() => DataFrame]] = Map.empty,
+                                delta: Map[String, DataFrame] = Map.empty,
+                                base: Option[Snapshot],
+                                seenPieces: Int = 1)
+
+/** A frontier queue's row count, and how many of its rows each half of a
+  * depth-0 split keeps: `fetch` (FETCH or SPIDER_FETCH mode) and `spider`
+  * (SPIDER or SPIDER_FETCH mode). */
+private final case class QueueSize(rows: Long, fetch: Long, spider: Long) {
+  def +(o: QueueSize): QueueSize =
+    QueueSize(rows + o.rows, fetch + o.fetch, spider + o.spider)
+}
+private object QueueSize { val Empty: QueueSize = QueueSize(0L, 0L, 0L) }
 
 /** The crawl's scalar state, stored as snapshot meta: the loop's position
   * (rule, depth, waves run), the next discovery rank, the next batch
@@ -955,6 +1016,27 @@ private[engine] object CrawlCursor {
 
 object CrawlEngine {
   import graft.model.{ErrorCode, Mode}
+  import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+  // encoders derived once: `spark.implicits` derives a product encoder by
+  // TypeTag reflection at every use
+  private val FrontierEnc: Encoder[FrontierRecord] = Encoders.product
+  private val SeenEnc: Encoder[Seen] = Encoders.product
+  private val WaveMetricsEnc: Encoder[WaveMetrics] = Encoders.product
+
+  /** The append tables' names, in snapshot order, with their row encoders. */
+  private val AppendTableEncoders: ListMap[String, Encoder[_]] = ListMap(
+    "seen" -> SeenEnc, "processed" -> Encoders.product[ProcessedRow],
+    "dump" -> Encoders.product[DumpRow], "edges" -> Encoders.product[Edge],
+    "aliases" -> Encoders.product[Alias],
+    "fetch_log" -> Encoders.product[FetchLogEntry],
+    "robots_blocked" -> Encoders.product[RobotsBlockedRow],
+    "metrics" -> WaveMetricsEnc, "fetched" -> Encoders.product[FetchedRaw])
+
+  /** The big-path rank's per-partition offsets: (partition id, offset). */
+  private val OffsetSchema = StructType(Seq(
+    StructField("_g_pid", LongType, nullable = false),
+    StructField("_g_off", LongType, nullable = false)))
 
   /**
    * Fetch-outcome expression over a (frontier record ⨝ corpus) row —
